@@ -169,7 +169,11 @@ def q07_topk_per_group(spark, sf_dir):
     partial-WGL output, a fine trade at any scale where the scan is one
     task — and at cluster scale fan_out no-ops and the partial-WGL-first
     plan returns. Measured 1.283 -> 0.776 s median (5 interleaved reps,
-    identical 3000-row output)."""
+    identical 3000-row output). Bound: l_suppkey has only as many distinct
+    values as there are suppliers (~10 at sf0.001, ~1000 at sf0.1), so at
+    most that many fan-out partitions are non-empty and the parallelism
+    gain at small scale factors is capped by supplier cardinality; the
+    output is unaffected (the window order is total)."""
     li = fan_out(_t(spark, sf_dir, "lineitem"), "l_suppkey")
     w = Window.partitionBy("l_suppkey").orderBy(
         F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")
@@ -818,9 +822,10 @@ def q44_frame_sample(spark, sf_dir):
 def q45_span_enumeration(spark, sf_dir):
     """Exhaustive token n-gram span enumeration (N4,
     modeling_E2E_exhaustive.py:87-104) via the Arrow/numpy zero-shuffle form
-    (mentions.candidate_spans_arrow — the round-4 default in the flagship's
-    02_mentions stage): every 1..3-token window with exact character offsets
-    and span text == substr(text, start+1, end-start). Hard oracle: DuckDB
+    (mentions.candidate_spans_arrow, which shares its tokenizer and span
+    kernels with the flagship's fused 02_mentions matcher): every 1..3-token
+    window with exact character offsets and span text ==
+    substr(text, start+1, end-start). Hard oracle: DuckDB
     reproduces offsets with ordinality + running-sum windows + lead()."""
     from e2e_el_spark.operators.mentions import candidate_spans_arrow
 

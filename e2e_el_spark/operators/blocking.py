@@ -262,16 +262,22 @@ def tfidf_candidates(
 # ---------------------------------------------------------------------------
 
 
-def shingle_array_expr(text_col: str, width: int = 3) -> str:
-    """SQL expr: the document's DISTINCT hashed shingle set as
-    ARRAY<BIGINT> — computed entirely narrowly (slide → xxhash64 →
-    array_distinct inside one projection, no explode, no shuffle)."""
-    raw = (
+def _shingle_window_expr(text_col: str, width: int) -> str:
+    """SQL expr: every width-char substring of the lowercased text (standard
+    full sliding window, not the compat quirk; a shorter text is its own
+    single shingle)."""
+    return (
         f"CASE WHEN length(lower({text_col})) >= {width} THEN "
         f"transform(sequence(1, length(lower({text_col})) - {width} + 1), "
         f"i -> substr(lower({text_col}), i, {width})) ELSE array(lower({text_col})) END"
     )
-    return f"array_distinct(transform({raw}, s -> xxhash64(s)))"
+
+
+def shingle_array_expr(text_col: str, width: int = 3) -> str:
+    """SQL expr: the document's DISTINCT hashed shingle set as
+    ARRAY<BIGINT> — computed entirely narrowly (slide → xxhash64 →
+    array_distinct inside one projection, no explode, no shuffle)."""
+    return f"array_distinct(transform({_shingle_window_expr(text_col, width)}, s -> xxhash64(s)))"
 
 
 def shingles(
@@ -288,12 +294,7 @@ def shingles(
     collisions (negligible per document: ~10⁻¹⁹ at 10⁵ shingles/doc).
     ``hashed=False`` keeps the raw substring for debugging/inspection.
     """
-    raw = (
-        # standard full sliding window (not the compat quirk)
-        f"CASE WHEN length(lower({text_col})) >= {width} THEN "
-        f"transform(sequence(1, length(lower({text_col})) - {width} + 1), "
-        f"i -> substr(lower({text_col}), i, {width})) ELSE array(lower({text_col})) END"
-    )
+    raw = _shingle_window_expr(text_col, width)
     expr = f"transform({raw}, s -> xxhash64(s))" if hashed else raw
     return (
         df.select(
@@ -304,36 +305,34 @@ def shingles(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str,
-    num_hashes: int = 32, shingle_width: int = 3,
+def minhash_from_shingle_arrays(
+    hs: DataFrame, id_col: str, num_hashes: int, out_col: str | None = None,
 ) -> DataFrame:
-    """(id, sig ARRAY<BIGINT>) — MinHash signature, built-ins only.
+    """(id, sig ARRAY<BIGINT>) from ``hs(id_col, _hs)``, the per-id
+    shingle-hash sets of ``shingle_array_expr`` — the one MinHash signature
+    builder, shared by blocking and dedup. The id comes out as ``out_col``
+    (default ``id_col``).
 
-    h_i(x) = xxhash64(shingle_hash, i); sig[i] = min over the document's
-    distinct shingle set. Computed by exploding the shingle-hash set and
-    taking the ``num_hashes`` minima in ONE codegen'd hash aggregate
-    (``min(xxhash64(_h, i))``). min() over a set is order-independent, so
-    the output is bit-identical to the round-5 narrow form
-    (``array_min(transform(_hs, h -> xxhash64(h, i)))`` × num_hashes in a
-    single projection) — but that form evaluated every hash in Catalyst's
-    INTERPRETED higher-order-function path (lambda dispatch + a fresh
-    array allocation per hash index per row): measured 1.6× slower
+    h_i(x) = xxhash64(shingle_hash, i); sig[i] = min over the set. Computed
+    by exploding the set and taking the ``num_hashes`` minima in ONE
+    codegen'd hash aggregate (``min(xxhash64(_h, i))``). min() over a set
+    is order-independent, so the output is bit-identical to the round-5
+    narrow form (``array_min(transform(_hs, h -> xxhash64(h, i)))`` ×
+    num_hashes in a single projection) — but that form evaluated every hash
+    in Catalyst's INTERPRETED higher-order-function path (lambda dispatch +
+    a fresh array allocation per hash index per row): measured 1.6× slower
     like-for-like at equal parallelism, on both the bench-document and
-    pipeline-surface shapes (OPTIMIZATION_r06.md, q30). In the round-5
-    q30 plan the interpreted projection additionally ran TWICE (self-join
+    pipeline-surface shapes (OPTIMIZATION_r06.md, q30). In the round-5 q30
+    plan the interpreted projection additionally ran TWICE (self-join
     subtree duplication) inside a single-partition cached relation — the
     structural half of that query's 8.33 s. The aggregate is whole-stage
-    codegen with map-side partial aggregation: each task reduces to one
-    row per document BEFORE the exchange, so the shuffle moves
-    signature-sized rows (id + num_hashes longs) — the very rows the LSH
-    banding step shuffles anyway — never the exploded (doc, shingle) rows.
-    Callers whose input is already hash-partitioned by ``id_col`` (e.g.
-    after ``partitioning.fan_out``) skip even that exchange.
+    codegen with map-side partial aggregation: each task reduces to one row
+    per id BEFORE the exchange, so the shuffle moves signature-sized rows
+    (id + num_hashes longs) — the very rows the LSH banding step shuffles
+    anyway — never the exploded (id, shingle) rows. Callers whose input is
+    already hash-partitioned by ``id_col`` (e.g. after
+    ``partitioning.fan_out``) skip even that exchange.
     """
-    hs = df.select(
-        F.col(id_col), F.expr(shingle_array_expr(text_col, shingle_width)).alias("_hs")
-    )
     ex = hs.select(id_col, F.explode("_hs").alias("_h"))
     mins = ex.groupBy(id_col).agg(
         *[
@@ -342,9 +341,21 @@ def minhash_signatures(
         ]
     )
     return mins.select(
-        F.col(id_col),
+        F.col(id_col) if out_col is None else F.col(id_col).alias(out_col),
         F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("sig"),
     )
+
+
+def minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str,
+    num_hashes: int = 32, shingle_width: int = 3,
+) -> DataFrame:
+    """(id, sig ARRAY<BIGINT>) — MinHash signature of ``text_col``'s
+    shingle set, built-ins only (see ``minhash_from_shingle_arrays``)."""
+    hs = df.select(
+        F.col(id_col), F.expr(shingle_array_expr(text_col, shingle_width)).alias("_hs")
+    )
+    return minhash_from_shingle_arrays(hs, id_col, num_hashes)
 
 
 def lsh_band_keys(

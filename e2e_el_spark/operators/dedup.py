@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 
 from e2e_el_spark.operators.blocking import (
     lsh_band_keys,
+    minhash_from_shingle_arrays,
     same_block_pairs,
+    shingle_array_expr,
     shingles,
 )
 
@@ -89,8 +91,6 @@ def minhash_near_duplicates(
     Jaccard per pair so the threshold is exact, not probabilistic.
     Returns (id_a, id_b, jaccard) for pairs ≥ threshold.
     """
-    from e2e_el_spark.operators.blocking import shingle_array_expr
-
     rows = num_hashes // bands
     # per-doc distinct shingle-hash ARRAY, computed narrowly (no explode, no
     # distinct shuffle); feeds the signatures AND the Jaccard verify
@@ -98,24 +98,8 @@ def minhash_near_duplicates(
         F.col(id_col).alias("_id"),
         F.expr(shingle_array_expr(text_col, shingle_width)).alias("_hs"),
     ).cache()
-    # signature via explode + ONE codegen'd min(xxhash64(h, i)) hash
-    # aggregate — bit-identical to the interpreted array_min(transform(...))
-    # per-index form (min over a set is order-independent), measured 1.6×
-    # faster like-for-like, and evaluated ONCE: the round-5 self-join
-    # duplicated the whole interpreted projection per pair side; map-side
-    # partial agg keeps the exchange at signature size
-    # (see blocking.minhash_signatures)
-    ex = hs.select("_id", F.explode("_hs").alias("_h"))
-    mins = ex.groupBy("_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    sigs = mins.select(
-        F.col("_id").alias(id_col),
-        F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("sig"),
-    )
+    # signatures from the SAME cached sets (one codegen'd aggregate)
+    sigs = minhash_from_shingle_arrays(hs, "_id", num_hashes, out_col=id_col)
     keys = lsh_band_keys(sigs, id_col, bands, rows)
     cand = same_block_pairs(keys, id_col, max_block_size=max_block_size).select(
         "id_a", "id_b"

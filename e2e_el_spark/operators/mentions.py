@@ -235,107 +235,186 @@ def _spans_window(
     )
 
 
-def candidate_spans_narrow(
-    documents: DataFrame, max_tokens: int = 4
-) -> DataFrame:
-    """Token n-gram span candidates computed NARROWLY — zero token shuffle.
+#: output columns of the two Arrow kernels; the fused matcher adds the
+#: gazetteer candidate
+_SPAN_COLS = ["document_id", "start_index", "end_index", "text"]
+_MATCH_COLS = _SPAN_COLS + ["gazetteer_entity_id"]
 
-    Same output contract as ``candidate_spans(tokenize_with_offsets(docs))``
-    (equivalence-tested), but the whole enumeration happens INSIDE each line
-    row: in-row prefix sums give token start offsets, ``transform`` over
-    1..max_tokens widths gives the spans. The window form shuffles and sorts
-    EVERY token row — the single largest exchange of the mention stage
-    (~10-100× the raw document bytes).
 
-    WHEN TO USE WHICH (measured, 60k pages × mult 8, this host):
-    the window form is whole-stage-codegen'd and CPU-cheaper (~2.2×:
-    higher-order-function lambdas evaluate interpreted, per element), while
-    this form trades that CPU for ZERO token-level exchange. On a single
-    shared-memory box the shuffle is a memory-bandwidth copy, so the
-    codegen'd window form wins wall-clock and stays the default in
-    ``detect_mentions``. On a multi-executor cluster the same exchange is
-    NETWORK + disk spill at 10-100× document bytes — there, eliminating it
-    buys more than the lambda overhead costs, and this operator is the
-    drop-in (``detect_mentions(..., narrow_spans=True)``).
-    """
-    lines = documents.select(
-        "document_id", F.posexplode(F.split("text", "\n")).alias("line", "_lt")
+def _empty_frame(columns: list) -> "pd.DataFrame":
+    """Zero-row pandas frame in the Arrow kernels' output dtypes."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {c: pd.Series([], dtype="int32" if c.endswith("_index") else "object")
+         for c in columns}
     )
-    lw = (
-        Window.partitionBy("document_id")
-        .orderBy("line")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # line start offsets still need one running sum — but over LINE rows
-    # (≈ documents-sized, not token-sized)
-    lines = lines.withColumn(
-        "_ls", F.coalesce(F.sum(F.length("_lt") + F.lit(1)).over(lw), F.lit(0)).cast("int")
-    )
-    # per-line token starts, built in-row from token-length prefix sums:
-    # start_i = i + Σ len(token_<i). The inner aggregate(slice(...)) makes
-    # this O(tokens²) integer adds per line — cheap next to either
-    # alternative tried: a per-char substr space scan is O(chars²) BYTE
-    # scans (UTF8 char indexing rescans from 0), and an array_append prefix
-    # scan copies the accumulator per step. No substr anywhere: span text is
-    # concat_ws over a token slice, so nothing rescans the line string.
-    prep = (
-        lines.withColumn("_tk", F.split("_lt", " "))
-        .withColumn("_lens", F.expr("transform(_tk, t -> length(t))"))
-        .withColumn(
-            "_starts",
-            F.expr(
-                "transform(sequence(0, size(_tk) - 1), "
-                "i -> CAST(i + aggregate(slice(_lens, 1, i), 0, (a, x) -> a + x) AS INT))"
-            ),
+
+
+def _python_tokens(t: str):
+    """(tok_s, tok_e, line): CHAR offsets and line ids of one document's
+    ' '/'\\n'-separated tokens — the non-ASCII fallback's tokenizer (byte
+    offsets != char offsets there, so the flat byte buffer cannot serve)."""
+    import re
+
+    import numpy as np
+
+    sp, nl = [], []
+    for m in re.finditer("[ \n]", t):
+        sp.append(m.start())
+        nl.append(t[m.start()] == "\n")
+    spv = np.asarray(sp, dtype=np.int64)
+    tok_s = np.concatenate(([0], spv + 1))
+    tok_e = np.concatenate((spv, [len(t)]))
+    line = np.concatenate(([0], np.cumsum(np.asarray(nl, dtype=bool))))
+    return tok_s, tok_e, line
+
+
+def _ascii_tokens(doc_bytes: list):
+    """Batch-global tokenizer over ONE flat buffer: the ASCII docs joined by
+    '\\n' (spans never cross newlines, so doc boundaries are free). Returns
+    (arr, doc_off, tok_s, tok_e, line): the uint8 buffer, each doc's start
+    offset in it, and per-token byte offsets + line ids."""
+    import numpy as np
+
+    arr = np.frombuffer(b"\n".join(doc_bytes), dtype=np.uint8)
+    doc_lens = np.asarray([len(b) for b in doc_bytes], dtype=np.int64)
+    # doc k occupies [doc_off[k], doc_off[k] + len_k)
+    doc_off = np.concatenate(([0], np.cumsum(doc_lens[:-1] + 1)))
+    sp = np.flatnonzero((arr == 32) | (arr == 10))
+    tok_s = np.concatenate(([0], sp + 1))
+    tok_e = np.concatenate((sp, [len(arr)]))
+    nl = arr[sp] == 10 if len(sp) else np.zeros(0, dtype=bool)
+    line = np.concatenate(([0], np.cumsum(nl)))
+    return arr, doc_off, tok_s, tok_e, line
+
+
+def _gather(arr, starts, lens):
+    """Grouped byte gather of ``arr[s : s + L]`` for every (s, L): one
+    ``sliding_window_view`` fancy-index per DISTINCT length, no per-value
+    Python object. Returns (order, chunks): the stable by-length
+    permutation the values come out in, and their byte chunks."""
+    import numpy as np
+
+    order = np.argsort(lens, kind="stable")
+    s_o, L_o = starts[order], lens[order]
+    widths, starts_ix = np.unique(L_o, return_index=True)
+    bounds = np.append(starts_ix, len(L_o))
+    chunks = []
+    for w, lo, hi in zip(widths, bounds[:-1], bounds[1:]):
+        if w == 0:
+            continue  # empty-token values contribute 0 bytes
+        windows = np.lib.stride_tricks.sliding_window_view(arr, int(w))
+        chunks.append(windows[s_o[lo:hi]].tobytes())
+    return order, chunks
+
+
+def _ascii_spans(arr, doc_off, tok_s, tok_e, line, max_tokens: int, bits=None):
+    """All 1..max_tokens-token spans of the flat buffer that stay on one
+    line; with ``bits`` (per-token anchor bitmask, bit n = width n allowed)
+    only the anchored ones. Returns (doc index, doc-relative start, end,
+    span texts as a utf8 array), or None when no span survives."""
+    import numpy as np
+
+    ntok = len(tok_s)
+    id_chunks, s_chunks, e_chunks, len_chunks, val_chunks = [], [], [], [], []
+    for n in range(1, min(max_tokens, ntok) + 1):
+        m_ = ntok - n + 1
+        ok = line[:m_] == line[n - 1 :]
+        if bits is not None:
+            ok &= ((bits[:m_] >> n) & 1) == 1
+        s = tok_s[:m_][ok]
+        e = tok_e[n - 1 :][ok]
+        if not len(s):
+            continue
+        # doc index + doc-relative offsets (same doc for s and e: spans
+        # never cross '\n', and doc boundaries ARE '\n')
+        di = np.searchsorted(doc_off, s, side="right") - 1
+        base, L = doc_off[di], e - s
+        order, chunks = _gather(arr, s, L)
+        id_chunks.append(di[order].astype(np.int32))
+        s_chunks.append((s - base)[order].astype(np.int32))
+        e_chunks.append((e - base)[order].astype(np.int32))
+        len_chunks.append(L[order].astype(np.int64))
+        val_chunks.extend(chunks)
+    if not id_chunks:
+        return None
+    text_pa = _utf8_from_lens(np.concatenate(len_chunks), b"".join(val_chunks))
+    return (np.concatenate(id_chunks), np.concatenate(s_chunks),
+            np.concatenate(e_chunks), text_pa)
+
+
+def _ascii_frame(doc_ids: list, di, s, e, text_pa, ent_pa=None) -> "pd.DataFrame":
+    """Kernel output frame from doc indexes into ``doc_ids``, offsets and
+    Arrow string columns (zero-copy: ids are a dictionary decode)."""
+    import pandas as pd
+    import pyarrow as pa
+
+    ids_pa = pa.DictionaryArray.from_arrays(
+        pa.array(di, type=pa.int32()), pa.array(doc_ids, type=pa.string())
+    ).cast(pa.string())
+    cols = {
+        "document_id": pd.Series(ids_pa, dtype=pd.ArrowDtype(pa.string())),
+        "start_index": pd.Series(s, dtype="int32"),
+        "end_index": pd.Series(e, dtype="int32"),
+        "text": pd.Series(text_pa, dtype=pd.ArrowDtype(pa.string())),
+    }
+    if ent_pa is not None:
+        cols["gazetteer_entity_id"] = pd.Series(
+            ent_pa, dtype=pd.ArrowDtype(pa.string())
         )
+    return pd.DataFrame(cols)
+
+
+def _map_ascii_split(documents: DataFrame, ascii_fn, python_fn, columns: list) -> DataFrame:
+    """The ``mapInPandas`` scan both Arrow kernels share. Each batch splits
+    into ASCII docs (byte offsets == char offsets), solved as ONE flat numpy
+    problem by ``ascii_fn(ids, bytes) -> frame | None``, and the rest, which
+    ``python_fn(id, text)`` turns into row tuples with char offsets —
+    correctness identical, speed proportional to their share."""
+    import pandas as pd
+
+    def gen(batches):
+        for pdf in batches:
+            fast_ids, fast_bytes, rows = [], [], []
+            for did, text in zip(pdf["document_id"], pdf["text"]):
+                t = text or ""
+                b = t.encode("utf-8")
+                if len(b) == len(t):
+                    fast_ids.append(did)
+                    fast_bytes.append(b)
+                else:
+                    rows.extend(python_fn(did, t))
+            out = ascii_fn(fast_ids, fast_bytes) if fast_ids else None
+            frames = [] if out is None else [out]
+            if rows:
+                frames.append(
+                    pd.DataFrame(rows, columns=columns).astype(
+                        {"start_index": "int32", "end_index": "int32"}
+                    )
+                )
+            yield from frames or [_empty_frame(columns)]
+
+    schema = ", ".join(
+        f"{c} {'int' if c.endswith('_index') else 'string'}" for c in columns
     )
-    # spans of n consecutive tokens, n = 1..max_tokens; end of span i..i+n-1
-    # = start_{i+n-1} + len(token_{i+n-1}); guard width > token count (an
-    # unguarded descending sequence() would emit phantom spans)
-    span_arrays = ", ".join(
-        (
-            f"CASE WHEN size(_tk) >= {n} THEN transform(sequence(0, size(_tk) - {n}), "
-            f"i -> struct("
-            f"CAST(_ls + _starts[i] AS INT) AS start_index, "
-            f"CAST(_ls + _starts[i + {n - 1}] + _lens[i + {n - 1}] AS INT) AS end_index, "
-            f"concat_ws(' ', slice(_tk, i + 1, {n})) AS text)) "
-            f"ELSE CAST(array() AS ARRAY<STRUCT<start_index: INT, end_index: INT, text: STRING>>) END"
-        )
-        for n in range(1, max_tokens + 1)
-    )
-    return (
-        prep.select(
-            "document_id",
-            F.explode(F.expr(f"concat({span_arrays})")).alias("_s"),
-        )
-        .select(
-            "document_id",
-            F.col("_s.start_index").alias("start_index"),
-            F.col("_s.end_index").alias("end_index"),
-            F.col("_s.text").alias("text"),
-        )
-    )
+    return documents.select(
+        F.col("document_id").cast("string").alias("document_id"), "text"
+    ).mapInPandas(gen, schema)
 
 
 def candidate_spans_arrow(documents: DataFrame, max_tokens: int = 4) -> DataFrame:
     """Token n-gram span candidates via Arrow-batched numpy — zero token
-    shuffle AND C-speed enumeration (the third form; VERDICT r3 #2).
+    shuffle AND C-speed enumeration.
 
     Same output contract as ``candidate_spans(tokenize_with_offsets(docs))``
-    and ``candidate_spans_narrow`` (equivalence-tested). Shape rationale:
-
-    - the window form shuffles + sorts EVERY token row — the largest
-      exchange of the mention stage (~10-100× raw document bytes over the
-      network on a real cluster);
-    - the narrow form eliminates the shuffle but pays ~2.2× CPU because
-      higher-order-function lambdas evaluate interpreted per element
-      (measured round 3, recorded in ``candidate_spans_narrow``);
-    - this form is ``mapInPandas`` over document rows (zero shuffle, like
-      ``segmentation.segment_documents`` which proved the shape), measured
-      at ~3-10% CPU tax vs the codegen'd window form on this host (60k
-      pages × mult 8: n2 parity, n8 best-of 10.1s vs 9.1s) — so the window
-      form stays the shared-memory default, and this is the drop-in where
-      the token exchange is network (``span_mode="arrow"``).
+    (equivalence-tested). The window form shuffles + sorts EVERY token row
+    — the largest exchange of a span enumeration (~10-100× raw document
+    bytes over the network on a real cluster); this form is ``mapInPandas``
+    over document rows (zero shuffle, like
+    ``segmentation.segment_documents``), measured at ~3-10% CPU tax vs the
+    codegen'd window form (round 4, 60k pages × mult 8: n2 parity, n8
+    best-of 10.1s vs 9.1s).
 
     Python-boundary discipline: the whole Arrow batch is enumerated as ONE
     flat numpy problem — all (ASCII) docs concatenate into a single byte
@@ -347,168 +426,23 @@ def candidate_spans_arrow(documents: DataFrame, max_tokens: int = 4) -> DataFram
     Python string per span was memory-allocator-bound: 8 workers churning
     ~10⁸ PyObjects hit the same DRAM ceiling as the shuffle it replaced).
     Non-ASCII docs (byte ≠ char offsets) fall back to a per-doc Python
-    slice path — correctness identical, speed proportional to their share.
+    slice path.
     """
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
+    def ascii_fn(doc_ids: list, doc_bytes: list):
+        spans = _ascii_spans(*_ascii_tokens(doc_bytes), max_tokens)
+        return None if spans is None else _ascii_frame(doc_ids, *spans)
 
-    src = documents.select(
-        F.col("document_id").cast("string").alias("document_id"), "text"
-    )
-    schema = "document_id string, start_index int, end_index int, text string"
-
-    def _python_doc(did, t, out):
-        """Non-ASCII fallback: per-doc Python slicing (char offsets)."""
-        import re
-
-        sp, nl = [], []
-        for m in re.finditer("[ \n]", t):
-            sp.append(m.start())
-            nl.append(t[m.start()] == "\n")
-        spv = np.asarray(sp, dtype=np.int64)
-        tok_s = np.concatenate(([0], spv + 1))
-        tok_e = np.concatenate((spv, [len(t)]))
-        line = np.concatenate(([0], np.cumsum(np.asarray(nl, dtype=bool))))
+    def python_fn(did, t):
+        tok_s, tok_e, line = _python_tokens(t)
         ntok = len(tok_s)
-        for n in range(1, max_tokens + 1):
-            if ntok < n:
-                break
+        for n in range(1, min(max_tokens, ntok) + 1):
             m_ = ntok - n + 1
             ok = line[:m_] == line[n - 1 :]
-            s = tok_s[:m_][ok]
-            e = tok_e[n - 1 :][ok]
-            if len(s):
-                out["ids"].extend([did] * len(s))
-                out["s"].append(s.astype(np.int32))
-                out["e"].append(e.astype(np.int32))
-                out["t"].extend(t[a:b] for a, b in zip(s.tolist(), e.tolist()))
+            for a, b in zip(tok_s[:m_][ok].tolist(), tok_e[n - 1 :][ok].tolist()):
+                yield did, a, b, t[a:b]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            # split the batch into the ASCII fast path and the fallback
-            fast_ids: list = []
-            fast_bytes: list = []
-            py_out = {"ids": [], "s": [], "e": [], "t": []}
-            for did, text in zip(pdf["document_id"], pdf["text"]):
-                t = text or ""
-                b = t.encode("utf-8")
-                if len(b) == len(t):  # byte offsets == char offsets
-                    fast_ids.append(did)
-                    fast_bytes.append(b)
-                else:
-                    _python_doc(did, t, py_out)
-
-            frames = []
-            if fast_ids:
-                frames.append(_enumerate_ascii(fast_ids, fast_bytes))
-            if py_out["ids"]:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "document_id": pd.Series(py_out["ids"], dtype="object"),
-                            "start_index": pd.Series(
-                                np.concatenate(py_out["s"]), dtype="int32"
-                            ),
-                            "end_index": pd.Series(
-                                np.concatenate(py_out["e"]), dtype="int32"
-                            ),
-                            "text": pd.Series(py_out["t"], dtype="object"),
-                        }
-                    )
-                )
-            if not frames:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "document_id": pd.Series([], dtype="object"),
-                            "start_index": pd.Series([], dtype="int32"),
-                            "end_index": pd.Series([], dtype="int32"),
-                            "text": pd.Series([], dtype="object"),
-                        }
-                    )
-                )
-            yield from frames
-
-    def _enumerate_ascii(doc_ids: list, doc_bytes: list) -> "pd.DataFrame":
-        # ONE flat buffer: docs joined by '\n' — the separator scan, token
-        # offsets, line ids, and per-width slides are all batch-global
-        big = b"\n".join(doc_bytes)
-        arr = np.frombuffer(big, dtype=np.uint8)
-        doc_lens = np.asarray([len(b) for b in doc_bytes], dtype=np.int64)
-        # doc k occupies [doc_off[k], doc_off[k] + len_k)
-        doc_off = np.concatenate(([0], np.cumsum(doc_lens[:-1] + 1)))
-        is_sep = (arr == 32) | (arr == 10)
-        sp = np.flatnonzero(is_sep)
-        tok_s = np.concatenate(([0], sp + 1))
-        tok_e = np.concatenate((sp, [len(arr)]))
-        nl = arr[sp] == 10 if len(sp) else np.zeros(0, dtype=bool)
-        line = np.concatenate(([0], np.cumsum(nl)))
-        ntok = len(tok_s)
-
-        id_chunks: list = []
-        s_chunks: list = []
-        e_chunks: list = []
-        len_chunks: list = []
-        val_chunks: list = []
-        for n in range(1, max_tokens + 1):
-            if ntok < n:
-                break
-            m_ = ntok - n + 1
-            ok = line[:m_] == line[n - 1 :]
-            s = tok_s[:m_][ok]
-            e = tok_e[n - 1 :][ok]
-            if not len(s):
-                continue
-            # doc index + doc-relative offsets (same doc for s and e: spans
-            # never cross '\n', and doc boundaries ARE '\n')
-            di = np.searchsorted(doc_off, s, side="right") - 1
-            rel_s = (s - doc_off[di]).astype(np.int32)
-            rel_e = (e - doc_off[di]).astype(np.int32)
-            # grouped gather per span byte-length: one sliding_window_view
-            # slice per distinct width — no per-span Python
-            L = e - s
-            order = np.argsort(L, kind="stable")
-            s_o, L_o = s[order], L[order]
-            id_chunks.append(di[order].astype(np.int32))
-            s_chunks.append(rel_s[order])
-            e_chunks.append(rel_e[order])
-            len_chunks.append(L_o.astype(np.int64))
-            widths, starts_ix = np.unique(L_o, return_index=True)
-            bounds = np.append(starts_ix, len(L_o))
-            for w, lo, hi in zip(widths, bounds[:-1], bounds[1:]):
-                if w == 0:
-                    continue  # empty-token spans contribute 0 bytes
-                windows = np.lib.stride_tricks.sliding_window_view(arr, int(w))
-                val_chunks.append(windows[s_o[lo:hi]].tobytes())
-
-        if not id_chunks:
-            return pd.DataFrame(
-                {
-                    "document_id": pd.Series([], dtype="object"),
-                    "start_index": pd.Series([], dtype="int32"),
-                    "end_index": pd.Series([], dtype="int32"),
-                    "text": pd.Series([], dtype="object"),
-                }
-            )
-        lens = np.concatenate(len_chunks)
-        text_pa = _utf8_from_lens(lens, b"".join(val_chunks))
-        ids_pa = pa.DictionaryArray.from_arrays(
-            pa.array(np.concatenate(id_chunks), type=pa.int32()),
-            pa.array(doc_ids, type=pa.string()),
-        ).cast(pa.string())
-        return pd.DataFrame(
-            {
-                "document_id": pd.Series(ids_pa, dtype=pd.ArrowDtype(pa.string())),
-                "start_index": pd.Series(np.concatenate(s_chunks), dtype="int32"),
-                "end_index": pd.Series(np.concatenate(e_chunks), dtype="int32"),
-                "text": pd.Series(text_pa, dtype=pd.ArrowDtype(pa.string())),
-            }
-        )
-
-    return src.mapInPandas(gen, schema)
+    return _map_ascii_split(documents, ascii_fn, python_fn, _SPAN_COLS)
 
 
 def _match_mentions_arrow(
@@ -525,10 +459,10 @@ def _match_mentions_arrow(
     form, the 1..max_tokens span explosion and the spans⋈gazetteer join all
     collapse into per-batch pyarrow C++ kernels — ``utf8_lower`` +
     ``index_in`` against the broadcast-closure alias arrays. Span texts are
-    built (via the grouped ``sliding_window_view`` gathers of
-    ``candidate_spans_arrow``) only at anchor positions whose first token
-    starts some alias at an allowed width — measured ~10-50× fewer span
-    constructions than exhaustive enumeration on web-like text.
+    built (via the same grouped gathers as ``candidate_spans_arrow``) only
+    at anchor positions whose first token starts some alias at an allowed
+    width — measured ~10-50× fewer span constructions than exhaustive
+    enumeration on web-like text.
 
     Laziness note: the gazetteer (KB-bounded, ≪ corpus) is collected
     driver-side at plan-construction time — the Spark broadcast-variable
@@ -552,7 +486,6 @@ def _match_mentions_arrow(
     Greek final sigma / Turkish dotted-dotless I).
     """
     import os
-    from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
@@ -607,26 +540,9 @@ def _match_mentions_arrow(
     anchor_firsts = list(anchor_bits)
     anchor_widths = np.asarray([anchor_bits[k] for k in anchor_firsts], dtype=np.int32)
 
-    src = documents.select(
-        F.col("document_id").cast("string").alias("document_id"), "text"
-    )
-    schema = (
-        "document_id string, start_index int, end_index int, text string,"
-        " gazetteer_entity_id string"
-    )
-
-    def _python_doc(did, t, out):
+    def python_fn(did, t):
         """Non-ASCII fallback: per-doc anchored dict matching (char offsets)."""
-        import re
-
-        sp, nl = [], []
-        for m in re.finditer("[ \n]", t):
-            sp.append(m.start())
-            nl.append(t[m.start()] == "\n")
-        spv = np.asarray(sp, dtype=np.int64)
-        tok_s = np.concatenate(([0], spv + 1))
-        tok_e = np.concatenate((spv, [len(t)]))
-        line = np.concatenate(([0], np.cumsum(np.asarray(nl, dtype=bool))))
+        tok_s, tok_e, line = _python_tokens(t)
         ntok = len(tok_s)
         for i in range(ntok):
             bits = anchor_bits.get(t[tok_s[i] : tok_e[i]].lower())
@@ -641,47 +557,19 @@ def _match_mentions_arrow(
                 text = t[tok_s[i] : tok_e[j]]
                 ent = alias_map.get(text.lower())
                 if ent is not None:
-                    out.append((did, int(tok_s[i]), int(tok_e[j]), text, ent))
+                    yield did, int(tok_s[i]), int(tok_e[j]), text, ent
 
-    def _match_ascii(doc_ids: list, doc_bytes: list) -> "pd.DataFrame":
+    def ascii_fn(doc_ids: list, doc_bytes: list):
         if not anchor_firsts:  # empty gazetteer ⇒ no anchors ⇒ no matches
-            return pd.DataFrame(
-                {
-                    "document_id": pd.Series([], dtype="object"),
-                    "start_index": pd.Series([], dtype="int32"),
-                    "end_index": pd.Series([], dtype="int32"),
-                    "text": pd.Series([], dtype="object"),
-                    "gazetteer_entity_id": pd.Series([], dtype="object"),
-                }
-            )
-        big = b"\n".join(doc_bytes)
-        arr = np.frombuffer(big, dtype=np.uint8)
-        doc_lens = np.asarray([len(b) for b in doc_bytes], dtype=np.int64)
-        doc_off = np.concatenate(([0], np.cumsum(doc_lens[:-1] + 1)))
-        is_sep = (arr == 32) | (arr == 10)
-        sp = np.flatnonzero(is_sep)
-        tok_s = np.concatenate(([0], sp + 1))
-        tok_e = np.concatenate((sp, [len(arr)]))
-        nl = arr[sp] == 10 if len(sp) else np.zeros(0, dtype=bool)
-        line = np.concatenate(([0], np.cumsum(nl)))
-        ntok = len(tok_s)
-
+            return None
+        arr, doc_off, tok_s, tok_e, line = _ascii_tokens(doc_bytes)
         # per-token anchor lookup, batch-global: one utf8 array over all
         # tokens (arrow offsets must be contiguous, so the separator bytes
-        # are squeezed out by the same grouped per-width gathers the span
-        # build uses), lowered + hash-probed in C++
-        L = tok_e - tok_s
-        order = np.argsort(L, kind="stable")
-        s_o, L_o = tok_s[order], L[order]
-        widths, starts_ix = np.unique(L_o, return_index=True)
-        bounds = np.append(starts_ix, ntok)
-        val_chunks = []
-        for w, lo, hi in zip(widths, bounds[:-1], bounds[1:]):
-            if w == 0:
-                continue
-            windows = np.lib.stride_tricks.sliding_window_view(arr, int(w))
-            val_chunks.append(windows[s_o[lo:hi]].tobytes())
-        toks_sorted = _utf8_from_lens(L_o.astype(np.int64), b"".join(val_chunks))
+        # are squeezed out by the same grouped gathers the span build
+        # uses), lowered + hash-probed in C++
+        tok_len = tok_e - tok_s
+        order, chunks = _gather(arr, tok_s, tok_len)
+        toks_sorted = _utf8_from_lens(tok_len[order].astype(np.int64), b"".join(chunks))
         aidx_sorted = (
             pc.fill_null(
                 pc.index_in(
@@ -692,143 +580,34 @@ def _match_mentions_arrow(
             .to_numpy(zero_copy_only=False)
             .astype(np.int64, copy=False)
         )
-        aidx = np.empty(ntok, dtype=np.int64)
+        aidx = np.empty(len(tok_s), dtype=np.int64)
         aidx[order] = aidx_sorted
         bits = np.where(aidx >= 0, anchor_widths[np.maximum(aidx, 0)], 0).astype(
             np.int32
         )
 
-        id_chunks, s_chunks, e_chunks, len_chunks, sval_chunks = [], [], [], [], []
-        for n in range(1, max_tokens + 1):
-            if ntok < n:
-                break
-            m_ = ntok - n + 1
-            ok = (line[:m_] == line[n - 1 :]) & (((bits[:m_] >> n) & 1) == 1)
-            s = tok_s[:m_][ok]
-            e = tok_e[n - 1 :][ok]
-            if not len(s):
-                continue
-            di = np.searchsorted(doc_off, s, side="right") - 1
-            rel_s = (s - doc_off[di]).astype(np.int32)
-            rel_e = (e - doc_off[di]).astype(np.int32)
-            Ls = e - s
-            o2 = np.argsort(Ls, kind="stable")
-            s2, L2 = s[o2], Ls[o2]
-            id_chunks.append(di[o2].astype(np.int32))
-            s_chunks.append(rel_s[o2])
-            e_chunks.append(rel_e[o2])
-            len_chunks.append(L2.astype(np.int64))
-            w2, ix2 = np.unique(L2, return_index=True)
-            b2 = np.append(ix2, len(L2))
-            for w, lo, hi in zip(w2, b2[:-1], b2[1:]):
-                if w == 0:
-                    continue
-                windows = np.lib.stride_tricks.sliding_window_view(arr, int(w))
-                sval_chunks.append(windows[s2[lo:hi]].tobytes())
-
-        empty = pd.DataFrame(
-            {
-                "document_id": pd.Series([], dtype="object"),
-                "start_index": pd.Series([], dtype="int32"),
-                "end_index": pd.Series([], dtype="int32"),
-                "text": pd.Series([], dtype="object"),
-                "gazetteer_entity_id": pd.Series([], dtype="object"),
-            }
-        )
-        if not id_chunks:
-            return empty
-        lens = np.concatenate(len_chunks)
-        span_pa = _utf8_from_lens(lens, b"".join(sval_chunks))
+        spans = _ascii_spans(arr, doc_off, tok_s, tok_e, line, max_tokens, bits)
+        if spans is None:
+            return None
+        di, s, e, span_pa = spans
         midx = pc.index_in(pc.utf8_lower(span_pa), value_set=pa.array(alias_norms))
         keep = pc.is_valid(midx)
         kn = np.flatnonzero(keep.to_numpy(zero_copy_only=False))
         if not len(kn):
-            return empty
+            return None
         kept_idx = midx.filter(keep).cast(pa.int32())
         if isinstance(kept_idx, pa.ChunkedArray):
             kept_idx = kept_idx.combine_chunks()  # matched spans: small
         ent_pa = pa.DictionaryArray.from_arrays(
             kept_idx, pa.array(alias_entities)
         ).cast(pa.string())
-        ids_pa = pa.DictionaryArray.from_arrays(
-            pa.array(np.concatenate(id_chunks)[kn], type=pa.int32()),
-            pa.array(doc_ids, type=pa.string()),
-        ).cast(pa.string())
-        return pd.DataFrame(
-            {
-                "document_id": pd.Series(ids_pa, dtype=pd.ArrowDtype(pa.string())),
-                "start_index": pd.Series(np.concatenate(s_chunks)[kn], dtype="int32"),
-                "end_index": pd.Series(np.concatenate(e_chunks)[kn], dtype="int32"),
-                "text": pd.Series(
-                    span_pa.filter(keep), dtype=pd.ArrowDtype(pa.string())
-                ),
-                "gazetteer_entity_id": pd.Series(
-                    ent_pa, dtype=pd.ArrowDtype(pa.string())
-                ),
-            }
-        )
+        return _ascii_frame(doc_ids, di[kn], s[kn], e[kn], span_pa.filter(keep), ent_pa)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            fast_ids: list = []
-            fast_bytes: list = []
-            py_out: list = []
-            for did, text in zip(pdf["document_id"], pdf["text"]):
-                t = text or ""
-                b = t.encode("utf-8")
-                if len(b) == len(t):
-                    fast_ids.append(did)
-                    fast_bytes.append(b)
-                else:
-                    _python_doc(did, t, py_out)
-            frames = []
-            if fast_ids:
-                frames.append(_match_ascii(fast_ids, fast_bytes))
-            if py_out:
-                frames.append(
-                    pd.DataFrame(
-                        py_out,
-                        columns=[
-                            "document_id", "start_index", "end_index", "text",
-                            "gazetteer_entity_id",
-                        ],
-                    ).astype({"start_index": "int32", "end_index": "int32"})
-                )
-            if not frames:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "document_id": pd.Series([], dtype="object"),
-                            "start_index": pd.Series([], dtype="int32"),
-                            "end_index": pd.Series([], dtype="int32"),
-                            "text": pd.Series([], dtype="object"),
-                            "gazetteer_entity_id": pd.Series([], dtype="object"),
-                        }
-                    )
-                )
-            yield from frames
-
-    return src.mapInPandas(gen, schema)
+    return _map_ascii_split(documents, ascii_fn, python_fn, _MATCH_COLS)
 
 
-SPAN_MODES = ("window", "narrow", "arrow")
-#: modes accepted by :func:`detect_mentions` — the three generic span
-#: enumerators plus "fused" (detection-only: enumeration + alias matching
-#: collapsed into one scan, no standalone span DataFrame exists)
-DETECT_MODES = SPAN_MODES + ("fused",)
-
-
-def enumerate_spans(
-    documents: DataFrame, max_tokens: int = 4, mode: str = "window"
-) -> DataFrame:
-    """Dispatch over the three equivalence-tested span enumerators."""
-    if mode == "narrow":
-        return candidate_spans_narrow(documents, max_tokens)
-    if mode == "arrow":
-        return candidate_spans_arrow(documents, max_tokens)
-    if mode == "window":
-        return candidate_spans(tokenize_with_offsets(documents), max_tokens)
-    raise ValueError(f"unknown span mode {mode!r}; one of {SPAN_MODES}")
+#: detection forms accepted by :func:`detect_mentions`, one per regime
+DETECT_MODES = ("window", "fused")
 
 
 def detect_mentions(
@@ -836,8 +615,7 @@ def detect_mentions(
     gazetteer: DataFrame,
     max_tokens: int = 4,
     longest_match: bool = True,
-    narrow_spans: bool = False,
-    span_mode: str | None = None,
+    span_mode: str = "window",
     anchor_prune: bool = True,
 ) -> DataFrame:
     """Gazetteer mention detection (N1-analog + C6).
@@ -852,38 +630,30 @@ def detect_mentions(
     across reruns and parallelism levels (SURVEY.md §7.4: never
     monotonically_increasing_id).
 
-    ``span_mode`` selects the detection form: one of the three generic
-    enumerators (``"window"`` / ``"narrow"`` / ``"arrow"`` — see
-    ``enumerate_spans``) followed by the broadcast gazetteer join, or
-    ``"fused"`` (the pipeline default) which collapses enumeration + alias
-    matching into one zero-shuffle scan (:func:`_match_mentions_arrow`);
-    ``narrow_spans=True`` is the backward-compatible alias for
-    ``span_mode="narrow"``. Measured trade
-    (round 4, 60k pages × mult 8): the Arrow/numpy form has the window
-    form's CPU cost with the narrow form's zero token shuffle — see
-    ``candidate_spans_arrow`` and BENCH/SCALING_EVIDENCE.md.
+    ``span_mode`` selects one of the two detection forms, one per regime
+    (``pipeline.detect_mode`` picks between them by gazetteer size):
+
+    - ``"fused"`` collapses enumeration + alias matching into one
+      zero-shuffle scan (:func:`_match_mentions_arrow`) — the flagship form
+      while the gazetteer fits a driver-side collect;
+    - ``"window"`` enumerates spans with codegen'd lead() windows and
+      joins the broadcast gazetteer — the streaming form and the
+      large-gazetteer fallback.
 
     ``anchor_prune`` (default on; window mode) gates span materialization
     on the :func:`alias_anchor_dim` necessary conditions — first token
     starts some alias, span width in that alias set — before the span text
     is ever built or probed. Output-identical for any gazetteer
-    (equivalence-tested); detection-only, so the generic ``enumerate_spans``
-    (N4 exhaustive enumeration) is unchanged.
+    (equivalence-tested); ``anchor_prune=False`` is the exhaustive
+    reference those tests compare against.
     """
-    mode = span_mode or ("narrow" if narrow_spans else "window")
-    if mode not in DETECT_MODES:
-        raise ValueError(f"unknown span mode {mode!r}; one of {DETECT_MODES}")
-    if mode == "fused":
+    if span_mode not in DETECT_MODES:
+        raise ValueError(f"unknown span mode {span_mode!r}; one of {DETECT_MODES}")
+    if span_mode == "fused":
         matches = _match_mentions_arrow(documents, gazetteer, max_tokens)
     else:
-        if anchor_prune and mode == "window":
-            spans = _spans_window(
-                tokenize_with_offsets(documents),
-                max_tokens,
-                anchors=alias_anchor_dim(gazetteer, max_tokens),
-            )
-        else:
-            spans = enumerate_spans(documents, max_tokens, mode)
+        anchors = alias_anchor_dim(gazetteer, max_tokens) if anchor_prune else None
+        spans = _spans_window(tokenize_with_offsets(documents), max_tokens, anchors)
         # min(entity_id) per normalized alias — deterministic on colliding
         # cross-entity aliases (dropDuplicates would pick an arbitrary row)
         # and identical to the fused matcher's driver-side dedupe

@@ -53,16 +53,6 @@ class PipelineConfig:
     lsh_rows_per_band: int = 2
     link_threshold: float = 0.55
     max_mention_tokens: int = 4
-    # span enumeration form for mention detection: "fused" (anchor-pruned
-    # enumeration + alias matching inside one zero-shuffle mapInPandas pass
-    # — fastest at BOTH parallelism levels measured, round 4, and the 100 TB
-    # shape: only matched mentions leave the scan; see
-    # mentions._match_mentions_arrow), "window" (codegen'd token-shuffle
-    # windows, anchor-pruned by default since round 4), "narrow" (in-row HOF
-    # prefix sums, zero shuffle at 2.2x CPU), or "arrow" (mapInPandas
-    # batch-global numpy enumeration of ALL spans + broadcast gazetteer
-    # join; the generic-N4 zero-shuffle form)
-    span_mode: str = "fused"
     # --- KB-size-aware plan decisions (round-5: the 5k-entity bench KB is
     # NOT the realistic 10^5-10^6-entity dictionary scale; these thresholds
     # switch plans instead of silently betting memory) ------------------
@@ -74,7 +64,8 @@ class PipelineConfig:
     broadcast_kb_max_entities: int = 200_000
     # Above this ALIAS count the detection stage falls back from the fused
     # matcher (plan-time driver-side gazetteer collect,
-    # mentions._match_mentions_arrow) to the distributed window-join form.
+    # mentions._match_mentions_arrow) to the distributed window-join form
+    # (see detect_mode).
     fused_max_aliases: int = 2_000_000
     # prune near-zero tf·idf entries before the gram join (see
     # blocking.tfidf_vectors — the 100 TB hot-gram guard); None = exact
@@ -124,14 +115,6 @@ class PipelineConfig:
     # prescore_keep must be ≥ 2·tfidf_topk (the final per-surface cut).
     prescore_grams: int = 8
     prescore_keep: int = 30
-    # R5-g: on the shuffled-KB path (past broadcast_kb_max_entities), prune
-    # the KB-proportional entity-vector frame by the vocab-bounded sets of
-    # grams that can actually appear on the probe side (phase 1: grams in
-    # some surface's top-prescore_grams; phase 2: grams in any surface
-    # vector) via broadcast semi-joins BEFORE the wide shuffles. Exactness
-    # is tested (test_shuffled_kb_path_equals_broadcast_path); the knob
-    # exists for campaign A/Bs, not correctness.
-    prune_kb_grams: bool = True
     # token-prefix blocks join at most this many entities per key (ordered
     # by entity_id — deterministic); the cap is the mention-entity analogue
     # of same_block_pairs' max_block_size
@@ -486,7 +469,7 @@ def candidate_pairs(
     # and the ones a top-by-weight cut excludes from sv_top. On the
     # broadcast path evh ships whole either way — prune nothing, keep the
     # plan-tested broadcast shape unchanged.
-    if kb_small or not cfg.prune_kb_grams:
+    if kb_small:
         evh_p1 = evh_p2 = evh
     else:
         sv_top = sv_top.persist()  # consumed by the prune AND the join chain
@@ -719,6 +702,14 @@ def clusters_from_links(
     )
 
 
+def detect_mode(n_aliases: int, cfg: PipelineConfig) -> str:
+    """The mention-detection form for a gazetteer of ``n_aliases`` rows:
+    ``"fused"`` while it fits the matcher's plan-time driver-side collect
+    (at most ``cfg.fused_max_aliases``), else the distributed ``"window"``
+    join — past the threshold the collect is a driver-heap bet."""
+    return "fused" if n_aliases <= cfg.fused_max_aliases else "window"
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -753,18 +744,14 @@ def run_pipeline(
     documents = runner.run("01_extract", lambda: extract_documents(pages))
 
     def _detect(docs_df: DataFrame) -> DataFrame:
-        mode = cfg.span_mode
-        if mode == "fused" and gazetteer.count() > cfg.fused_max_aliases:
-            # the fused matcher collects the gazetteer driver-side at plan
-            # construction; past the alias threshold that is a driver-heap
-            # bet, so fall back to the distributed window-join detector.
-            # The count job is KB-bounded and only paid when this stage
-            # actually computes (resume skips the whole lambda).
+        # the alias count job is KB-bounded and only paid when this stage
+        # actually computes (resume skips the whole lambda)
+        mode = detect_mode(gazetteer.count(), cfg)
+        if mode == "window":
             logging.getLogger(__name__).warning(
                 "gazetteer exceeds fused_max_aliases=%d: falling back to"
                 " span_mode='window' for detection", cfg.fused_max_aliases,
             )
-            mode = "window"
         return detect_mentions(
             docs_df, gazetteer, cfg.max_mention_tokens, span_mode=mode
         )

@@ -12,7 +12,36 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
+
+def host_cpus() -> int:
+    """Cores for the default ``local[n]`` master: ``SPARK_GRAFT_CPUS`` if
+    set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+
+
+def host_memory_mib() -> int:
+    """Memory this process may use: MemTotal, or the cgroup (v2 or v1)
+    limit when that is lower."""
+    with open("/proc/meminfo") as f:
+        mib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:")) // 1024
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():  # "max" / absent = unlimited
+            mib = min(mib, int(limit) // (1 << 20))
+    return mib
+
+
+def default_driver_memory_mib() -> int:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a quarter of
+    the host's memory, between 1 GiB and 48 GiB. The other three quarters
+    stay for the Python workers (every Arrow UDF runs outside the heap),
+    off-heap shuffle/tmpfs pages, and a second JVM on the same host."""
+    return max(1024, min(48 * 1024, host_memory_mib() // 4))
 
 
 def get_spark(
@@ -28,11 +57,16 @@ def get_spark(
     operator in this engine is a pandas UDF / applyInPandas / mapInPandas.
     """
     if master is None:
-        master = os.environ.get("SPARK_GRAFT_MASTER", "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{host_cpus()}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
+        ) or host_cpus()
+    heap = (
+        (extra_conf or {}).get("spark.driver.memory")
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or f"{default_driver_memory_mib()}m"
+    )
     # Shuffles start from a partition count sized for the BIG stages and let
     # AQE coalesce the small ones down, instead of one static number serving
     # both. Measured motivation (BENCH/SCALING_EVIDENCE.md R5-l/R5-m): with
@@ -67,10 +101,7 @@ def get_spark(
         # 123.7s -> 72.2s when flipped back to true). KB-bounded stages pay
         # no measurable tax under true at the raised initialPartitionNum
         # (03_pairs 17.3s vs 21.0s in the same pair).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # size post-shuffle partitions for the EXPLODED row counts the
         # blocking/span operators produce, not the compact pre-explode bytes
@@ -88,9 +119,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.maxResultSize", "4g")
+        # a collected result must fit the heap with room to spare
+        .config("spark.driver.maxResultSize", f"{min(4096, _mib(heap) // 2)}m")
         # local-mode shuffle goes through spark.local.dir — on tmpfs the
         # shuffle stages scale with cores instead of serializing on disk I/O
         .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
@@ -101,6 +133,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _mib(size: str) -> int:
+    """A Spark memory size ("4g", "512m"; a bare number is MiB) in MiB."""
+    s = size.strip().lower().rstrip("b")
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1 << 20}
+    return max(1, int(float(s[:-1]) * scale[s[-1]]) if s[-1] in scale else int(s))
 
 
 def stop_spark() -> None:

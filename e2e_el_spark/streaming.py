@@ -106,10 +106,9 @@ def make_links_processor(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         docs = extract_documents(batch_df)
-        # default (window-form) detection, NOT cfg.span_mode: the fused
-        # matcher collects the gazetteer at plan construction, i.e. once
-        # per MICRO-BATCH here — same rationale as stream_mentions_to.
-        # cfg.span_mode is intentionally ignored for this stage.
+        # window-form detection, not the batch pipeline's fused form: the
+        # fused matcher collects the gazetteer at plan construction, i.e.
+        # once per MICRO-BATCH here — same rationale as stream_mentions_to.
         mentions = detect_mentions(docs, gazetteer, cfg.max_mention_tokens)
         cands = candidate_pairs(mentions, entities, cfg, kb=kb_art)
         scored = score_candidates(cands, mentions, entities, cfg, gazetteer)

@@ -42,14 +42,6 @@ def main() -> None:
         help="L3: cross-encoder rerank of the top-K candidates per surface; 0 disables",
     )
     ap.add_argument(
-        "--span-mode", default=None,
-        choices=["fused", "window", "narrow", "arrow"],
-        help="mention detection form: fused (enumeration + alias matching "
-        "in one zero-shuffle scan — the default when unset), window "
-        "(token-shuffle, codegen'd), narrow (in-row HOF), arrow "
-        "(mapInPandas+numpy span enumeration, zero token shuffle)",
-    )
-    ap.add_argument(
         "--cc-checkpoint-dir", default=None,
         help="reliable per-round parquet checkpoints for the connected-"
         "components fixpoint (executor-loss tolerant; default uses "
@@ -85,15 +77,12 @@ def main() -> None:
             else entities.selectExpr("entity_id", "name AS alias")
         )
 
-    cfg_kwargs = dict(
+    cfg = PipelineConfig(
         link_threshold=args.link_threshold,
         langs=tuple(args.langs.split(",")) if args.langs else None,
         segment_budget_chars=args.segment_budget or None,
         rerank_topk=args.rerank_topk or None,
     )
-    if args.span_mode:
-        cfg_kwargs["span_mode"] = args.span_mode
-    cfg = PipelineConfig(**cfg_kwargs)
     clusters = run_pipeline(
         spark, pages, entities, gazetteer, args.workdir, cfg,
         kb_workdir=args.kb_workdir,

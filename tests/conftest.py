@@ -7,7 +7,7 @@ from e2e_el_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="e2e_el_spark_tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="e2e_el_spark_tests")
     yield s
     s.stop()
 

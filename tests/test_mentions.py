@@ -97,15 +97,10 @@ def _span_fixture(spark):
 
 
 def test_candidate_spans_alt_forms_equal_window_form(spark):
-    """The zero-shuffle enumerations (narrow HOF form, Arrow/numpy form) must
-    emit EXACTLY the span set of the window form (same offsets, same texts),
-    including multi-space / multi-line / unicode quirks."""
-    from e2e_el_spark.operators.mentions import (
-        candidate_spans,
-        candidate_spans_arrow,
-        candidate_spans_narrow,
-        tokenize_with_offsets,
-    )
+    """The zero-shuffle Arrow/numpy enumeration must emit EXACTLY the span
+    set of the window form (same offsets, same texts), including
+    multi-space / multi-line / unicode quirks."""
+    from e2e_el_spark.operators.mentions import candidate_spans_arrow
 
     docs = _span_fixture(spark)
     for mt in (1, 2, 4):
@@ -113,30 +108,25 @@ def test_candidate_spans_alt_forms_equal_window_form(spark):
             (r.document_id, r.start_index, r.end_index, r.text)
             for r in candidate_spans(tokenize_with_offsets(docs), mt).collect()
         )
-        for alt in (candidate_spans_narrow, candidate_spans_arrow):
-            got = sorted(
-                (r.document_id, r.start_index, r.end_index, r.text)
-                for r in alt(docs, mt).collect()
-            )
-            assert got == want, (alt.__name__, mt, got[:5], want[:5])
+        got = sorted(
+            (r.document_id, r.start_index, r.end_index, r.text)
+            for r in candidate_spans_arrow(docs, mt).collect()
+        )
+        assert got == want, (mt, got[:5], want[:5])
 
 
 def test_candidate_spans_alt_forms_substring_invariant(spark):
     # span invariant: span text == substr(doc text, start+1, end-start)
-    from e2e_el_spark.operators.mentions import (
-        candidate_spans_arrow,
-        candidate_spans_narrow,
-    )
+    from e2e_el_spark.operators.mentions import candidate_spans_arrow
 
     docs = _span_fixture(spark)
-    for alt in (candidate_spans_narrow, candidate_spans_arrow):
-        spans = alt(docs, 4).withColumnRenamed("text", "span_text")
-        joined = spans.join(docs, "document_id")
-        n_bad = joined.filter(
-            F.expr("substr(text, start_index + 1, end_index - start_index)")
-            != F.col("span_text")
-        ).count()
-        assert n_bad == 0, alt.__name__
+    spans = candidate_spans_arrow(docs, 4).withColumnRenamed("text", "span_text")
+    joined = spans.join(docs, "document_id")
+    n_bad = joined.filter(
+        F.expr("substr(text, start_index + 1, end_index - start_index)")
+        != F.col("span_text")
+    ).count()
+    assert n_bad == 0
 
 
 def test_detect_mentions_same_result_across_span_modes(spark):
@@ -149,9 +139,32 @@ def test_detect_mentions_same_result_across_span_modes(spark):
         "entity_id string, alias string",
     )
     want = sorted(map(tuple, detect_mentions(docs, gaz, span_mode="window").collect()))
-    for mode in ("narrow", "arrow", "fused"):
-        got = sorted(map(tuple, detect_mentions(docs, gaz, span_mode=mode).collect()))
-        assert got == want, mode
+    got = sorted(map(tuple, detect_mentions(docs, gaz, span_mode="fused").collect()))
+    assert got == want
+
+
+def test_detect_mentions_rejects_removed_modes(spark):
+    """Only the two detection forms remain; any other mode fails fast,
+    naming both."""
+    import pytest
+
+    docs = spark.createDataFrame([("d1", "a b")], "document_id string, text string")
+    gaz = spark.createDataFrame([("e1", "a")], "entity_id string, alias string")
+    with pytest.raises(ValueError) as err:
+        detect_mentions(docs, gaz, span_mode="narrow")
+    assert "'window'" in str(err.value) and "'fused'" in str(err.value)
+
+
+def test_detect_mode_falls_back_past_fused_max_aliases():
+    """The pipeline's detection-form rule at its boundary: a gazetteer of
+    exactly fused_max_aliases aliases still uses the fused matcher, one
+    more alias switches to the window join."""
+    from e2e_el_spark.pipeline import PipelineConfig, detect_mode
+
+    cfg = PipelineConfig(fused_max_aliases=1000)
+    assert detect_mode(1000, cfg) == "fused"
+    assert detect_mode(1001, cfg) == "window"
+    assert detect_mode(0, cfg) == "fused"
 
 
 def test_detect_mentions_anchor_prune_equivalence(spark):
@@ -243,8 +256,9 @@ def test_detect_mentions_fused_empty_gazetteer(spark):
 
 
 def test_detect_mentions_mode_equivalence_property(spark):
-    """Property: all four detection forms agree on random corpora and
-    gazetteers — words drawn from a small alphabet so aliases collide with
+    """Property: the anchor-pruned window form and the fused matcher agree
+    with the unpruned window reference on random corpora and gazetteers —
+    words drawn from a small alphabet so aliases collide with
     document n-grams often, plus unicode words to force the fused matcher's
     fallback, empty tokens (double spaces), newlines, and width-1..5
     aliases (5 > max_tokens exercises the never-matchable prune)."""
@@ -279,12 +293,7 @@ def test_detect_mentions_mode_equivalence_property(spark):
         want = sorted(
             map(tuple, detect_mentions(docs, gaz, anchor_prune=False).collect())
         )
-        for kw in (
-            {"anchor_prune": True},
-            {"span_mode": "fused"},
-            {"span_mode": "narrow"},
-            {"span_mode": "arrow"},
-        ):
+        for kw in ({"anchor_prune": True}, {"span_mode": "fused"}):
             got = sorted(map(tuple, detect_mentions(docs, gaz, **kw).collect()))
             assert got == want, (kw, texts, aliases)
 

@@ -2,6 +2,8 @@
 bit-identical to the shape it replaced, and the scale-adaptive fan-out must
 be a structural no-op when the input is already parallel."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -131,15 +133,20 @@ def test_q07_sort_runs_above_the_fan_out_exchange(spark):
     and the WindowGroupLimit appears once (Final) instead of Partial+Final
     around a pre-exchange 1-task sort."""
     import __spark_entry__ as entrymod
+    from tests.test_oracle_parity import SF_DIR
 
-    df = entrymod.queries()["q07_topk_per_group"](spark, "/root/testdata/sf0.001")
+    df = entrymod.queries()["q07_topk_per_group"](spark, SF_DIR)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    tree = plan.split("(1) Scan")[0]
-    assert tree.count("Exchange") == 1
-    assert tree.count("WindowGroupLimit") == 1
+    # operator-tree lines are "<tree prefix>NodeName [details] (id)"; keep
+    # the whole node name so e.g. SortAggregate never counts as a Sort
+    nodes = [
+        m.group(1)
+        for line in plan.split("(1) Scan")[0].splitlines()
+        if (m := re.match(r"^[\s:+-]*([A-Za-z]\w*)\b.*\(\d+\)$", line))
+    ]
+    assert nodes.count("Exchange") == 1, nodes
+    assert nodes.count("WindowGroupLimit") == 1, nodes
     # the Sort node sits above the Exchange in the operator tree
-    sort_line = next(i for i, l in enumerate(tree.splitlines()) if "Sort" in l)
-    exch_line = next(i for i, l in enumerate(tree.splitlines()) if "Exchange" in l)
-    assert sort_line < exch_line
+    assert nodes.index("Sort") < nodes.index("Exchange"), nodes
