@@ -1,473 +1,199 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + BASELINE.md scaling evidence).
+"""N-vs-4N scaling campaign for the flagship entity-resolution job.
 
-1. Headline queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR (default
-   /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] — per-query seconds.
-2. The flagship ER pipeline on the deterministic synthetic pages corpus at
-   TWO parallelism levels, N and 4N cores (default local[2] vs local[8] —
-   chosen because this sandbox VM itself stops scaling past ~8-16 processes:
-   raw multiprocessing blake2b gives 0.95 efficiency 2→8 but only 0.59
-   8→32, see BENCH/BASELINE.md), each level in its own subprocess so JIT
-   warmup is symmetric. Reports pages/sec at both + scaling efficiency.
+Usage: python bench.py OUT.json PAGES SIZE_MULT ENTITIES TRIALS
 
-Prints ONE json line:
-  {"metric": ..., "value": <total headline sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "throughput": {...}}
+The levels come from the host: N = max(1, cores // 4) and 4N, where cores
+are the CPUs this process may run on (1 and 4 on a 4-core host). The corpus
+is written to parquet once, before any timed window, by
+``perfbench/inputs.write_corpus``. Each (trial, level) runs in its own
+subprocess pinned to the first N cores, so ``get_spark()`` sizes
+``local[N]``, shuffle partitions and heap from that mask. Trials alternate
+ABBA across levels, because this host's speed drifts over minutes.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, EL_BENCH_PAGES,
-EL_BENCH_MULT, EL_BENCH_ENTITIES, EL_BENCH_TRIALS, EL_SCALING_LEVELS,
-EL_SKIP_SCALING=1 (headline queries only).
+A worker builds the KB and runs one warm-up job untimed, times one
+``run_pipeline`` with ``PipelineConfig(rerank_topk=5)``, reads the stage
+walls from the stage markers, then hashes the clusters and scores pairwise
+F1 against gold. OUT.json keeps per level the walls, stage walls, hashes,
+F1 and the stderr tail of each failed trial, and the N → 4N ratios. The
+campaign exits non-zero when any two trials' clusters differ. Whole-job
+latency and the headline queries are timed by perfbench/run.py.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
+import shutil
+import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
+from perfbench import inputs
+
 REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO)
 
-HEADLINE = [
-    "q01_pricing_summary",
-    "q02_orders_by_segment",
-    "q03_brand_revenue_broadcast",
-    "q07_topk_per_group",
-    "q12_running_revenue",
-    "q16_char_ngram_counts",
-    "q17_tfidf_vocab",
-    "q18_langid",
-    "q20_token_budget_audit",
-    "q23_brute_force_ann",
-    "q26_doc_segmentation",
-    "q30_minhash_near_dups",
-]
+SEED = 1
+WORKER = "import bench, sys; bench.worker(*sys.argv[1:])"
 
 
-def run_headline(sf_dir: str, cpus: int, reps: int = 3) -> dict[str, float]:
-    """Per-query MEDIAN over ``reps`` interleaved full passes.
+def levels(cores: int) -> tuple[int, int]:
+    """The (N, 4N) core counts for a host with ``cores`` CPUs."""
+    n = max(1, cores // 4)
+    return n, 4 * n
 
-    A single pass lands in one noise window of this shared VM (round 4's
-    only driver-visible reading was a degraded window: q30 17.79s vs its
-    re-measured 9.85s median) — interleaving whole passes and reporting
-    per-query medians is the same ABBA discipline the scaling campaigns
-    use."""
-    import statistics
 
+def worker(corpus_json: str, work: str) -> None:
+    """One timed flagship job in this process; prints one RESULT line."""
+    from pyspark.sql import functions as F
+
+    from e2e_el_spark.pipeline import (
+        PipelineConfig, build_kb_artifacts, evaluate_pipeline,
+        kb_content_fingerprint, run_pipeline,
+    )
     from e2e_el_spark.session import get_spark
-    import __spark_entry__ as entrymod
 
-    spark = get_spark(app_name="el_bench_queries", master=f"local[{cpus}]",
-                      shuffle_partitions=min(cpus, 32))
-    qs = entrymod.queries()
-    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    # warm the parquet scans + JIT once with the cheapest query
-    qs["q01_pricing_summary"](spark, sf_dir).count()
-    for _ in range(max(reps, 1)):
-        for name in HEADLINE:
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.time() - t0)
+    corpus = json.loads(corpus_json)
+    cfg = PipelineConfig(rerank_topk=5)
+    spark = get_spark(app_name="el_bench")
+    ents = spark.read.parquet(corpus["entities"])
+    aliases = spark.read.parquet(corpus["aliases"])
+    fp = kb_content_fingerprint(ents)
+    build_kb_artifacts(spark, ents, cfg, f"{work}/kb", kb_fingerprint=fp)
+
+    def job(pages_path: str, workdir: str):
+        return run_pipeline(spark, spark.read.parquet(pages_path), ents, aliases, workdir,
+                            cfg, kb_workdir=f"{work}/kb", kb_fingerprint=fp)
+
+    # warm-up (JIT, Python workers, Arrow and shuffle paths) on one page file
+    job(f"{corpus['pages']}/part-000.parquet", f"{work}/warm")
+    t0 = time.monotonic()
+    clusters = job(corpus["pages"], f"{work}/job")
+    wall = time.monotonic() - t0
+
+    stage_walls = {}
+    for marker in glob.glob(f"{work}/job/*/_STAGE_COMPLETE"):
+        with open(marker) as f:
+            meta = json.load(f)
+        stage_walls[meta["stage"]] = round(meta["wall_ms"] / 1000.0, 2)
+    row = clusters.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.expr("bit_xor(xxhash64(mention_id, cluster_id))"), F.lit(0)).alias("h"),
+    ).collect()[0]
+    f1 = evaluate_pipeline(clusters, spark.read.parquet(corpus["gold"]), cfg)["f1"]
+    print("RESULT " + json.dumps({
+        "master": spark.sparkContext.master,
+        "wall_s": round(wall, 2),
+        "stage_walls_s": dict(sorted(stage_walls.items())),
+        "clusters_hash": f"{row['n']}:{row['h']}",
+        "pairwise_f1": round(f1, 6),
+    }), flush=True)
     spark.stop()
-    return {name: round(statistics.median(ts), 2) for name, ts in samples.items()}
 
 
-def _cpu_work(n: int) -> int:
-    """Pure-CPU unit for the machine-ceiling probe (module-level so
-    multiprocessing can pickle it)."""
-    import hashlib
-
-    h = 0
-    for i in range(n):
-        h ^= hashlib.blake2b(f"g{i % 97}".encode(), digest_size=8).digest()[0]
-    return h
+def result_of(proc: subprocess.CompletedProcess) -> dict:
+    """A worker's RESULT, or its exit status and stderr tail."""
+    m = re.search(r"^RESULT (\{.*\})$", proc.stdout, re.M)
+    if proc.returncode == 0 and m:
+        return json.loads(m.group(1))
+    return {"error": f"exit {proc.returncode}: {proc.stderr[-2000:]}"}
 
 
-def _ceiling_probe_once() -> tuple[float, float, float]:
-    import multiprocessing as mp
-
-    # per sized for ~4s walls: 1s probes are dominated by scheduler
-    # microbursts on this shared VM (a 3-probe median once measured a
-    # "ceiling" above 1.0 — impossible except under sub-second drift)
-    def bench_procs(procs: int, per: int = 3_000_000) -> float:
-        t = time.time()
-        with mp.Pool(procs) as p:
-            p.map(_cpu_work, [per] * procs)
-        return time.time() - t
-
-    return bench_procs(2), bench_procs(8), bench_procs(32)
-
-
-def summarize_ceiling(samples: list[tuple[float, float, float]]) -> dict:
-    """Median over probe samples — a single probe lands in one noise window
-    of this shared VM (±40% drift) and has produced nonsense like an 8→32
-    'efficiency' above 1; sampling once per ABBA round and taking medians
-    measures the same window the job trials ran in."""
-    import statistics
-
-    t2 = statistics.median(s[0] for s in samples)
-    t8 = statistics.median(s[1] for s in samples)
-    t32 = statistics.median(s[2] for s in samples)
-    return {
-        "n_probes": len(samples),
-        "wall_2p_s": round(t2, 2), "wall_8p_s": round(t8, 2), "wall_32p_s": round(t32, 2),
-        "cpu_efficiency_2_to_8": round(t2 / t8, 3),
-        "cpu_efficiency_8_to_32": round(t8 / t32, 3),
-    }
+def run_worker(n: int, corpus: dict, work: str) -> dict:
+    """One worker subprocess pinned to the first ``n`` cores."""
+    cpus = sorted(os.sched_getaffinity(0))[:n]
+    shutil.rmtree(work, ignore_errors=True)
+    os.makedirs(f"{work}/spark-local")
+    # the affinity mask sizes the session: drop the engine's env overrides
+    env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
+    env.update(PYTHONPATH=REPO, SPARK_LOCAL_DIRS=f"{work}/spark-local")
+    proc = subprocess.run(
+        [sys.executable, "-c", WORKER, json.dumps(corpus), work],
+        capture_output=True, text=True, env=env, cwd=REPO,
+        preexec_fn=lambda: os.sched_setaffinity(0, cpus),
+    )
+    shutil.rmtree(work, ignore_errors=True)
+    return result_of(proc)
 
 
-def measure_machine_ceiling(samples: int = 3) -> dict:
-    """Raw CPU-only multiprocessing scaling of this VM (no Spark, no shared
-    state) — the upper bound any job-level scaling claim can reach. Justifies
-    the N=2 vs 4N=8 level choice when 8→32 is hardware-capped."""
-    return summarize_ceiling([_ceiling_probe_once() for _ in range(samples)])
-
-
-def _one_scaling_run(cpus: int, pages: int, mult: int, ents: int) -> dict:
-    cmd = [sys.executable, "-m", "e2e_el_spark.bench_worker",
-           str(cpus), str(pages), str(mult), str(ents), "1"]
-    env = dict(os.environ, PYTHONPATH=REPO)
-    proc = subprocess.run(cmd, capture_output=True, text=True, env=env, cwd=REPO)
-    m = re.search(r"RESULT (\{.*\})", proc.stdout)
-    if not m:
-        return {"error": proc.stderr[-500:]}
-    return json.loads(m.group(1))
-
-
-def run_scaling(levels: list[int], pages: int, mult: int, ents: int, trials: int) -> dict:
-    """Interleave parallelism levels ABBA-style across trials — this VM's
-    throughput drifts ±40% over minutes, so back-to-back same-level trials
-    would bake the drift into the ratio. Per-level wall = median of trials."""
-    import statistics
-
-    walls: dict[int, list[float]] = {c: [] for c in levels}
-    stage_mins: dict[int, dict[str, float]] = {c: {} for c in levels}
-    last: dict[int, dict] = {}
-    ceiling_samples: list[tuple[float, float, float]] = []
+def campaign(lv: tuple[int, int], trials: int, run) -> dict[int, list[dict]]:
+    """``trials`` rounds over both levels, alternating ABBA."""
+    results: dict[int, list[dict]] = {n: [] for n in lv}
     for t in range(trials):
-        # one machine-ceiling probe per ABBA round: samples the SAME noise
-        # window the job trials run in (a single end-of-run probe has
-        # produced ±40%-drift artifacts)
-        ceiling_samples.append(_ceiling_probe_once())
-        for cpus in (levels if t % 2 == 0 else list(reversed(levels))):
-            r = _one_scaling_run(cpus, pages, mult, ents)
-            if "best_wall_s" in r:
-                walls[cpus].append(r["best_wall_s"])
-                last[cpus] = r
-                # best-of-trials PER STAGE (each worker process is one
-                # trial; taking the last trial's table would report
-                # whichever noise window it landed in)
-                for s, w in (r.get("stage_walls_s") or {}).items():
-                    prev = stage_mins[cpus].get(s)
-                    stage_mins[cpus][s] = w if prev is None else min(prev, w)
-    results: dict = {}
-    for cpus in levels:
-        if not walls[cpus]:
-            results[f"n{cpus}"] = {"error": "no successful runs"}
-            continue
-        med = statistics.median(walls[cpus])
-        results[f"n{cpus}"] = {
-            **{k: v for k, v in last[cpus].items() if k not in ("walls_s", "best_wall_s")},
-            "walls_s": walls[cpus],
-            "median_wall_s": round(med, 2),
-            "pages_per_sec": round(pages / med, 1),
-            "stage_walls_s": dict(sorted(stage_mins[cpus].items())),
-        }
-    lo, hi = f"n{levels[0]}", f"n{levels[-1]}"
-    if "median_wall_s" in results.get(lo, {}) and "median_wall_s" in results.get(hi, {}):
-        ratio = results[lo]["median_wall_s"] / results[hi]["median_wall_s"]
-        factor = levels[-1] / levels[0]
-        results["throughput_ratio"] = round(ratio, 3)
-        results["scaling_efficiency"] = round(ratio / factor, 3)
-        # drift-robust companion: best-of-trials walls. On this host identical
-        # trials spread up to 1.7× within one ABBA round; the min is the
-        # least-contended observation of the same job at each level. Reported
-        # ALONGSIDE the median number, never instead of it.
-        best_ratio = min(results[lo]["walls_s"]) / min(results[hi]["walls_s"])
-        results["scaling_efficiency_best_of_trials"] = round(best_ratio / factor, 3)
-        # Amdahl fit wall(n) = W/n + S from the two measured levels: S is the
-        # serial-equivalent floor (stage barriers, checkpoint latches,
-        # KB-bounded stages), W the parallel work. Reported so the
-        # fixed-corpus efficiency number carries its own scale context —
-        # W grows with the corpus, S does not, so eff(pages) climbs toward
-        # the machine ceiling; predicted_eff_* shows the fit's extrapolation.
-        n_lo, n_hi = levels[0], levels[-1]
-        w_lo, w_hi = results[lo]["median_wall_s"], results[hi]["median_wall_s"]
-        if w_lo > w_hi:
-            W = (w_lo - w_hi) / (1.0 / n_lo - 1.0 / n_hi)
-            S = max(w_lo - W / n_lo, 0.0)
-            results["serial_floor_fit"] = {
-                "parallel_work_s": round(W, 1),
-                "serial_floor_s": round(S, 1),
-                "predicted_eff_at_4x_corpus": round(
-                    ((4 * W / n_lo + S) / (4 * W / n_hi + S)) / factor, 3
-                ),
-                "predicted_eff_at_16x_corpus": round(
-                    ((16 * W / n_lo + S) / (16 * W / n_hi + S)) / factor, 3
-                ),
-            }
-        else:
-            # trial noise put the high-parallelism wall at/above the low one:
-            # the Amdahl fit would report non-positive parallel work — not
-            # scaling evidence, so say so instead of emitting garbage
-            results["serial_floor_fit"] = None
-            results["serial_floor_fit_note"] = (
-                f"not fit: median wall at n{n_lo} ({w_lo}s) <= n{n_hi} "
-                f"({w_hi}s) — noise dominated this campaign; raise "
-                "EL_BENCH_TRIALS or corpus size"
-            )
-    if ceiling_samples:
-        results["machine_ceiling"] = summarize_ceiling(ceiling_samples)
-    attach_stage_decomposition(results, levels)
+        for n in (lv if t % 2 == 0 else lv[::-1]):
+            r = run(n)
+            results[n].append(r)
+            print(f"bench: trial {t} n{n}: {r.get('wall_s', 'failed')}", file=sys.stderr,
+                  flush=True)
     return results
 
 
-def attach_stage_decomposition(results: dict, levels: list[int]) -> None:
-    """Per-stage N vs 4N speedups + the corpus-proportional efficiency.
-
-    The pairs stage (03) is KB-BOUNDED: its input is the distinct-surface ×
-    entity universe, which does not grow with the page corpus — at bench
-    scale its tasks are too small to use 4× cores, while at 100 TB it is a
-    vanishing fraction of the job. The corpus-proportional stages (extract,
-    mentions, scoring, links, clustering) are the ones whose scaling
-    predicts cluster behavior; their summed-wall efficiency is reported as
-    ``corpus_proportional_efficiency`` alongside the raw whole-job number —
-    a decomposition, not a substitution."""
-    lo, hi = f"n{levels[0]}", f"n{levels[-1]}"
-    sw_lo = results.get(lo, {}).get("stage_walls_s")
-    sw_hi = results.get(hi, {}).get("stage_walls_s")
-    if not (sw_lo and sw_hi):
-        return
-    factor = levels[-1] / levels[0]
-    results["stage_speedup"] = {
-        s: round(sw_lo[s] / sw_hi[s], 2)
-        for s in sorted(sw_lo)
-        if s in sw_hi and sw_hi[s] > 0
-    }
-    corpus_stages = [s for s in sw_lo if s in sw_hi and s != "03_pairs"]
-    lo_sum = sum(sw_lo[s] for s in corpus_stages)
-    hi_sum = sum(sw_hi[s] for s in corpus_stages)
-    if hi_sum > 0:
-        results["corpus_proportional_efficiency"] = round((lo_sum / hi_sum) / factor, 3)
-
-
-def attach_normalized_efficiency(scaling: dict) -> None:
-    """Raw AND machine-ceiling-normalized efficiency side by side: the raw
-    number divides by the ideal 4×; the normalized number divides by what
-    raw CPU-only multiprocessing achieves over the SAME core span on this
-    VM (measured in the same bench run) — the attainable ceiling."""
-    eff = scaling.get("scaling_efficiency")
-    # the ceiling probe is weak-scaling (per-proc work fixed, procs scale),
-    # so t2/t8 already IS the efficiency: 1.0 = perfect. Clamp at 1.0 —
-    # a measured value above 1 is drift, not attainable headroom.
-    ceil = (scaling.get("machine_ceiling") or {}).get("cpu_efficiency_2_to_8")
-    if eff is not None and ceil:
-        norm = round(eff / min(ceil, 1.0), 3)
-        scaling["scaling_efficiency_normalized_to_ceiling"] = norm
-        if norm > 1.0:
-            # the job out-scaled the probe's own window: the probe
-            # under-measured the machine, the job did not scale
-            # super-linearly — say so instead of reporting >1 silently
-            scaling["normalized_note"] = (
-                "normalized > 1 means the per-round ceiling probe landed in"
-                " a slow noise window; cite the raw number"
-            )
-
-
-def write_bench_md(queries: dict, scaling: dict, sf_dir: str, reps: int = 3) -> None:
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    lines = [
-        "# BENCH — measured numbers (latest `python bench.py` run)",
-        "",
-        f"Headline queries at `{sf_dir}` — per-query MEDIAN of {reps}",
-        "interleaved full passes (a single pass lands in one ±40% noise",
-        "window of this shared VM; see round-4 q30 17.79s vs 9.85s median):",
-        "",
-        "| query | median sec |",
-        "| --- | --- |",
-    ]
-    lines += [f"| {k} | {v} |" for k, v in queries.items()]
-    lines += [
-        "",
-        "## Two-cluster-size scaling evidence (north rule: N vs 4N)",
-        "",
-        "Same flagship ER job, same input, each parallelism level in its own",
-        "process (symmetric JIT warmup), best of trials:",
-        "",
-        "```json",
-        json.dumps(scaling, indent=2),
-        "```",
-        "",
-        "Level choice: this sandbox VM itself stops scaling past ~8-16",
-        "processes — raw CPU-only multiprocessing (blake2b hashing, zero",
-        "shared state) measures ≈0.95 efficiency from 2→8 procs but only",
-        "≈0.59 from 8→32 (see machine_ceiling above, re-measured per run),",
-        "so local[8] vs local[32] cannot evidence job scaling on this host.",
-        "N=2 vs 4N=8 cores is the honest pair.",
-        "",
-        "Measurement noise: this shared VM's throughput drifts ±40% over",
-        "minutes (identical configs measured 216s and 306s an hour apart).",
-        "Trials are ABBA-interleaved across levels and medians reported;",
-        "raise EL_BENCH_TRIALS for tighter intervals.",
-        "",
-        "Three efficiencies are reported side by side — a decomposition,",
-        "not a substitution:",
-        "`scaling_efficiency` is the RAW whole-job number (throughput",
-        "ratio / 4). `scaling_efficiency_normalized_to_ceiling` divides by",
-        "the machine's own weak-scaling CPU efficiency over the same 2→8",
-        "span, probed once per ABBA round (`machine_ceiling`).",
-        "`corpus_proportional_efficiency` covers the stages whose work grows",
-        "with the page corpus (extract/mentions/scoring/links/clustering) —",
-        "see `stage_speedup` for the per-stage walls. The pairs stage is",
-        "KB-BOUNDED (distinct surfaces × entities, invariant to corpus",
-        "size): at bench scale its sub-second tasks cannot use 4× cores, at",
-        "100 TB it is a vanishing fraction of the job. The per-stage table",
-        "makes that visible instead of hiding it in one blended number.",
-        "",
-        "Curated multi-run evidence + analysis: `BENCH/SCALING_EVIDENCE.md`",
-        "(this file is rewritten per run; that one is not).",
-    ]
-    lines += north_rule_section()
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
-def north_rule_section() -> list:
-    """Render the curated-campaign table + the north-rule verdict so the
-    judge-facing BASELINE.md always carries the claim, not just the one
-    small-corpus reading the per-round default campaign produces."""
-    try:
-        with open(os.path.join(REPO, "BENCH", "campaigns.json")) as f:
-            blob = json.load(f)
-    except (OSError, ValueError):
-        return []
-    camps = blob.get("campaigns", [])
-    lines = [
-        "",
-        "## North rule status (scaling efficiency >= 0.8, N vs 4N)",
-        "",
-        f"**{blob.get('met', 'see campaigns below')}** — the curated",
-        "ABBA-interleaved campaigns (committed, not rewritten per run):",
-        "",
-        "| id | engine | pages | KB entities | raw eff (N→4N) | n8 pages/s | note |",
-        "| --- | --- | --- | --- | --- | --- | --- |",
-    ]
-    for c in camps:
-        lines.append(
-            "| {id} | {engine} | {pages} | {kb} | {eff} | {pps} | {note} |".format(
-                id=c.get("id", "?"), engine=c.get("engine", ""),
-                pages=c.get("pages", ""), kb=c.get("kb_entities", 5000),
-                eff=c.get("raw_eff", "—"), pps=c.get("n8_pages_per_sec", "—"),
-                note=c.get("note", "")))
-    lines += [
-        "",
-        blob.get("comment", ""),
-    ]
-    return lines
-
-
-def compact_throughput(scaling: dict) -> dict:
-    """Small projection of the scaling results for the FINAL printed line.
-
-    The driver captures only a ~2000-char stdout tail; round 4's full
-    scaling dict + campaigns blob pushed the headline metrics out of the
-    capture (BENCH_r04.json parsed:null). Keep the final line comfortably
-    under that: efficiencies + per-level throughput only. Full detail goes
-    to BENCH/BASELINE.md and an earlier stdout line."""
-    if not scaling:
-        return {}
+def summarize(pages: int, results: dict[int, list[dict]]) -> dict:
+    """Per-level medians and failures, then the N → 4N ratios."""
     out: dict = {}
-    for k in ("throughput_ratio", "scaling_efficiency",
-              "scaling_efficiency_best_of_trials",
-              "corpus_proportional_efficiency",
-              "scaling_efficiency_normalized_to_ceiling"):
-        if k in scaling:
-            out[k] = scaling[k]
-    for k, v in scaling.items():
-        if k.startswith("n") and isinstance(v, dict):
-            out[k] = {kk: v[kk] for kk in ("median_wall_s", "pages_per_sec") if kk in v}
-    ceil = scaling.get("machine_ceiling") or {}
-    if "cpu_efficiency_2_to_8" in ceil:
-        out["machine_ceiling_2_to_8"] = ceil["cpu_efficiency_2_to_8"]
+    hashes = set()
+    for n, rs in results.items():
+        ok = [r for r in rs if "error" not in r]
+        level: dict = {"failed_trials": len(rs) - len(ok),
+                       "errors": [r["error"] for r in rs if "error" in r]}
+        if ok:
+            walls = [r["wall_s"] for r in ok]
+            med = statistics.median(walls)
+            level.update(
+                master=sorted({r["master"] for r in ok}),
+                walls_s=walls,
+                median_wall_s=round(med, 2),
+                pages_per_sec=round(pages / med, 1),
+                stage_walls_s={s: round(statistics.median(r["stage_walls_s"][s] for r in ok), 2)
+                               for s in ok[0]["stage_walls_s"]},
+                clusters_hash=sorted({r["clusters_hash"] for r in ok}),
+                pairwise_f1=min(r["pairwise_f1"] for r in ok),
+            )
+            hashes.update(level["clusters_hash"])
+        out[f"n{n}"] = level
+    out["clusters_hash_equal"] = len(hashes) <= 1
+    n_lo, n_hi = results
+    lo, hi = out[f"n{n_lo}"], out[f"n{n_hi}"]
+    if "median_wall_s" in lo and "median_wall_s" in hi:
+        ratio = lo["median_wall_s"] / hi["median_wall_s"]
+        out["throughput_ratio"] = round(ratio, 3)
+        out["scaling_efficiency"] = round(ratio / (n_hi / n_lo), 3)
+        out["stage_speedup"] = {
+            s: round(w / hi["stage_walls_s"][s], 2)
+            for s, w in lo["stage_walls_s"].items() if hi["stage_walls_s"].get(s)
+        }
     return out
 
 
-def curated_campaign_eff() -> dict:
-    """Compact ``{id@pages: raw_eff}`` of the committed curated campaigns
-    for the FINAL printed line. The north-rule claim (>=0.8 efficiency N vs
-    4N) rests on the >=480k-page campaigns; the ~15-min per-round default
-    campaign runs 60k pages where the corpus-invariant KB-bounded stages
-    dominate (Amdahl) — so the final line carries both numbers explicitly
-    instead of letting the small-corpus reading stand alone."""
+def main(argv: list[str] | None = None) -> int:
+    args = sys.argv[1:] if argv is None else argv
+    if len(args) != 5:
+        raise SystemExit(__doc__)
+    out_path = args[0]
+    pages, mult, ents, trials = (int(a) for a in args[1:])
+    cores = len(os.sched_getaffinity(0))
+    lv = levels(cores)
+    work = tempfile.mkdtemp(prefix="el_bench_")
     try:
-        with open(os.path.join(REPO, "BENCH", "campaigns.json")) as f:
-            camps = json.load(f)["campaigns"]
-    except (OSError, KeyError, ValueError):
-        return {}
-    return {f"{c['id']}@{c['pages'] // 1000}k": c["raw_eff"]
-            for c in camps if "raw_eff" in c and "pages" in c}
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf = float(re.search(r"sf([\d.]+)", sf_dir).group(1)) if re.search(r"sf([\d.]+)", sf_dir) else 0.1
-
-    reps = int(os.environ.get("EL_HEADLINE_REPS", "3"))
-    queries = run_headline(sf_dir, cpus, reps=reps)
-
-    scaling: dict = {}
-    if os.environ.get("EL_SKIP_SCALING") != "1":
-        levels = [int(x) for x in os.environ.get("EL_SCALING_LEVELS", "2,8").split(",")]
-        # default sized so the per-round driver bench stays ~10-15 min
-        # (2 ABBA trials at 60k pages); the multi-size campaigns (60k 3-trial
-        # + 240k) are committed in BENCH/SCALING_EVIDENCE.md
-        pages = int(os.environ.get("EL_BENCH_PAGES", "60000"))
-        mult = int(os.environ.get("EL_BENCH_MULT", "8"))
-        ents = int(os.environ.get("EL_BENCH_ENTITIES", "5000"))
-        trials = int(os.environ.get("EL_BENCH_TRIALS", "2"))
-        scaling = run_scaling(levels, pages, mult, ents, trials)
-        if "machine_ceiling" not in scaling:
-            scaling["machine_ceiling"] = measure_machine_ceiling()
-        attach_normalized_efficiency(scaling)
-
-    write_bench_md(queries, scaling, sf_dir, reps=reps)
-    total = round(sum(queries.values()), 2)
-    # Full scaling detail + curated campaigns on EARLIER stdout lines (and
-    # in BENCH/ files) — the driver tail-captures ~2000 chars, so the FINAL
-    # line must stay compact or the headline metrics are lost (round 4's
-    # BENCH_r04.json parsed:null came from inlining the campaigns blob).
-    if scaling:
-        print("SCALING_FULL " + json.dumps(scaling))
-    try:
-        with open(os.path.join(REPO, "BENCH", "campaigns.json")) as f:
-            print("CURATED_CAMPAIGNS " + json.dumps(json.load(f)))
-    except OSError:
-        pass
-    out = {
-        "metric": "headline_query_total",
-        "value": total,
-        "unit": "sec",
-        "queries": queries,
-        "sf": sf,
-        "headline_reps": reps,
-        "throughput": compact_throughput(scaling),
-        "campaign_raw_eff": curated_campaign_eff(),
-        "curated_campaigns_ref": "BENCH/campaigns.json",
-        "scaling_evidence_ref": "BENCH/SCALING_EVIDENCE.md",
-    }
-    line = json.dumps(out)
-    if len(line) >= 1900:
-        # degrade rather than lose the whole line to the tail capture
-        out["throughput"] = {k: v for k, v in out["throughput"].items()
-                             if not isinstance(v, dict)}
-        line = json.dumps(out)
-    print(line)
+        corpus = inputs.write_corpus(f"{work}/corpus", SEED, pages, mult, ents,
+                                     max(16, 2 * lv[1]))
+        results = campaign(lv, trials, lambda n: run_worker(n, corpus, f"{work}/n{n}"))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    summary = {"pages": pages, "size_mult": mult, "entities": ents, "trials": trials,
+               "cores": cores, "levels": list(lv), **summarize(pages, results)}
+    with open(out_path, "w") as f:
+        json.dump(summary, f, indent=1)
+    print(json.dumps(summary))
+    if not summary["clusters_hash_equal"]:
+        print("bench: clusters_hash differs between trials", file=sys.stderr)
+        return 1
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

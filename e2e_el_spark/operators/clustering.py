@@ -212,7 +212,6 @@ def connected_components(
 def cluster_nodes(
     edges_str: DataFrame, all_nodes: DataFrame | None = None,
     src_col: str = "src_key", dst_col: str = "dst_key",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """String-keyed wrapper: edges over string node keys → (node_key, cluster_id).
 
@@ -223,7 +222,7 @@ def cluster_nodes(
     ids = edges_str.select(
         F.xxhash64(F.col(src_col)).alias("src"), F.xxhash64(F.col(dst_col)).alias("dst")
     )
-    assign = connected_components(ids, checkpoint_dir=checkpoint_dir)
+    assign = connected_components(ids)
     mapping = (
         edges_str.select(F.col(src_col).alias("node_key"))
         .unionAll(edges_str.select(F.col(dst_col).alias("node_key")))

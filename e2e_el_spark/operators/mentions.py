@@ -449,7 +449,7 @@ def _match_mentions_arrow(
     documents: DataFrame,
     gazetteer: DataFrame,
     max_tokens: int,
-    max_collected_aliases: int | None = None,
+    max_collected_aliases: int = 5_000_000,
 ) -> DataFrame:
     """Fused gazetteer matcher: anchor-pruned span enumeration AND alias
     lookup inside one zero-shuffle ``mapInPandas`` pass (the "fused arrow
@@ -467,11 +467,11 @@ def _match_mentions_arrow(
     Laziness note: the gazetteer (KB-bounded, ≪ corpus) is collected
     driver-side at plan-construction time — the Spark broadcast-variable
     pattern, same trade as ``operators.similarity``'s lazy-dim fallback.
-    The collect is guarded by ``max_collected_aliases`` (default
-    ``EL_FUSED_MAX_ALIASES`` or 5,000,000 — ~hundreds of MB of driver heap
-    at web-KB alias lengths): past the limit the matcher raises instead of
-    silently betting driver memory; callers should fall back to
-    ``span_mode="window"`` (broadcast/shuffle join picks itself via AQE).
+    The collect is guarded by ``max_collected_aliases`` (default 5,000,000
+    — ~hundreds of MB of driver heap at web-KB alias lengths): past the
+    limit the matcher raises instead of silently betting driver memory;
+    callers should fall back to ``span_mode="window"`` (broadcast/shuffle
+    join picks itself via AQE).
 
     Case folding: aliases are collected RAW and folded driver-side with
     Python ``str.lower()`` — the SAME function the non-ASCII doc path
@@ -485,17 +485,11 @@ def _match_mentions_arrow(
     non-Latin scripts too (equivalence property-tested incl. Cyrillic /
     Greek final sigma / Turkish dotted-dotless I).
     """
-    import os
-
     import numpy as np
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    if max_collected_aliases is None:
-        max_collected_aliases = int(
-            os.environ.get("EL_FUSED_MAX_ALIASES", "5000000")
-        )
     # raw-alias dedupe happens JVM-side (bounds the collect to distinct
     # aliases); folding happens DRIVER-side so it uses the match-time
     # function. limit(n+1) bounds the transferred rows even when the guard
@@ -512,8 +506,7 @@ def _match_mentions_arrow(
     if len(gpdf) > max_collected_aliases:
         raise ValueError(
             f"fused gazetteer matcher: >{max_collected_aliases} distinct"
-            " aliases — too large to collect driver-side; raise"
-            " EL_FUSED_MAX_ALIASES (costs driver heap) or use"
+            " aliases — too large to collect driver-side; use"
             ' span_mode="window" (distributed gazetteer join)'
         )
     # min(entity_id) per FOLDED alias: two-level min (per raw alias on the

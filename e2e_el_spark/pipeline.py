@@ -35,7 +35,7 @@ from e2e_el_spark.operators.blocking import (
     tfidf_vectors,
     token_prefix_key,
 )
-from e2e_el_spark.operators.clustering import cluster_nodes, cluster_star_links
+from e2e_el_spark.operators.clustering import cluster_star_links
 from e2e_el_spark.operators.mentions import detect_mentions
 from e2e_el_spark.operators.scoring import score_pairs
 from e2e_el_spark.operators.segmentation import segment_documents
@@ -664,38 +664,24 @@ def mention_links(links: DataFrame, mentions: DataFrame) -> DataFrame:
     ).select("mention_id", "entity_id", "score")
 
 
-def clusters_from_links(
-    links: DataFrame, mentions: DataFrame, cc_checkpoint_dir: str | None = None,
-    star_fast_path: bool = True,
-) -> DataFrame:
+def clusters_from_links(links: DataFrame, mentions: DataFrame) -> DataFrame:
     """Connected components over the bipartite mention–entity match graph;
     unlinked mentions become singleton clusters.
 
     The links are star-shaped by construction (``link_top1`` keeps one
-    entity per surface ⇒ one entity per mention), so the default path is
-    the closed-form ``cluster_star_links`` — one aggregation + one join
+    entity per surface ⇒ one entity per mention), so they are clustered in
+    closed form by ``cluster_star_links`` — one aggregation + one join
     instead of the large-star/small-star fixpoint, identical output
-    (equivalence-tested at the operator AND this-function level). The
-    fixpoint remains reachable two ways: ``star_fast_path=False`` (edge
-    shape not guaranteed — e.g. callers feeding mention-mention links), or
-    ``cc_checkpoint_dir`` set, which makes the fixpoint's per-round
-    materialization reliable (parquet) instead of ``localCheckpoint`` for
-    multi-executor clusters where executor loss must not kill the
-    iteration (the closed form is a plain shuffle job — task retry covers
-    loss, no checkpoint mode exists for it)."""
+    (equivalence-tested against ``cluster_nodes`` at the operator AND this
+    function's level). It is a plain shuffle job, so Spark's task retry
+    covers executor loss without a checkpoint mode."""
     edges = links.select(
         F.col("mention_id").alias("src_key"),
         F.concat(F.lit("ENT:"), F.col("entity_id")).alias("dst_key"),
     )
     nodes = mentions.select(F.col("mention_id").alias("node_key"))
-    if star_fast_path and cc_checkpoint_dir is None:
-        assign = cluster_star_links(edges, all_nodes=nodes)
-    else:
-        assign = cluster_nodes(
-            edges, all_nodes=nodes, checkpoint_dir=cc_checkpoint_dir,
-        )
     return (
-        assign.join(
+        cluster_star_links(edges, all_nodes=nodes).join(
             mentions.select(F.col("mention_id").alias("node_key")), "node_key", "left_semi"
         )
         .select(F.col("node_key").alias("mention_id"), "cluster_id")
@@ -719,7 +705,6 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     kb_workdir: str | None = None,
     kb_fingerprint: str | None = None,
-    cc_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """pages → clusters(mention_id, document_id, start_index, end_index,
     text, cluster_id), with every stage checkpointed under ``workdir``.
@@ -816,7 +801,7 @@ def run_pipeline(
     )
     clusters = runner.run(
         "06_clusters",
-        lambda: clusters_from_links(links, mentions, cc_checkpoint_dir).join(
+        lambda: clusters_from_links(links, mentions).join(
             mentions.select("mention_id", "document_id", "start_index", "end_index", "text"),
             "mention_id",
         ).select("mention_id", "document_id", "start_index", "end_index", "text", "cluster_id"),

@@ -55,6 +55,8 @@ def get_spark(
     AQE is on (runtime coalescing + skew-join splitting — the reference has no
     optimizer at all, SURVEY.md §4); Arrow is on because every Python-boundary
     operator in this engine is a pandas UDF / applyInPandas / mapInPandas.
+    Shuffle scratch space is Spark's own ``SPARK_LOCAL_DIRS`` (tmpfs keeps
+    local-mode shuffles from serializing on disk I/O).
     """
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{host_cpus()}]")
@@ -78,9 +80,7 @@ def get_spark(
     # advisoryPartitionSizeInBytes. On a real 100 TB cluster this is the
     # same setting that keeps terabyte shuffles out of the spill regime
     # without hand-tuning spark.sql.shuffle.partitions per stage.
-    initial_partitions = int(
-        os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "0")
-    ) or max(4 * shuffle_partitions, 64)
+    initial_partitions = max(4 * shuffle_partitions, 64)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -115,7 +115,7 @@ def get_spark(
         # cores (measured: 02_mentions sped up only 1.06× from 2→8 cores).
         # 16m keeps scans parallel at bench scale; a real cluster reading
         # 100 TB would leave this at the default.
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -123,9 +123,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # a collected result must fit the heap with room to spare
         .config("spark.driver.maxResultSize", f"{min(4096, _mib(heap) // 2)}m")
-        # local-mode shuffle goes through spark.local.dir — on tmpfs the
-        # shuffle stages scale with cores instead of serializing on disk I/O
-        .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

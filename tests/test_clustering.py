@@ -144,7 +144,9 @@ def test_cluster_star_links_equals_fixpoint(spark):
 
 
 def test_clusters_from_links_star_path_matches_fixpoint(spark):
-    """The flagship clusters stage gives bit-equal output on both paths."""
+    """The flagship clusters stage (closed form) is bit-equal to the
+    fixpoint reference ``cluster_nodes`` over the same mention-entity
+    edges."""
     from e2e_el_spark.pipeline import clusters_from_links
 
     links = spark.createDataFrame(
@@ -157,8 +159,10 @@ def test_clusters_from_links_star_path_matches_fixpoint(spark):
     )
     star = {(r.mention_id, r.cluster_id)
             for r in clusters_from_links(links, mentions).collect()}
-    fix = {(r.mention_id, r.cluster_id)
-           for r in clusters_from_links(links, mentions,
-                                        star_fast_path=False).collect()}
+    edges = links.selectExpr("mention_id AS src_key", "concat('ENT:', entity_id) AS dst_key")
+    nodes = mentions.selectExpr("mention_id AS node_key")
+    fix = {(r.node_key, r.cluster_id)
+           for r in cluster_nodes(edges, all_nodes=nodes).collect()
+           if not r.node_key.startswith("ENT:")}
     assert star == fix
     assert len(star) == 8  # m6-m8 singletons included
